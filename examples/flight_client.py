@@ -30,7 +30,7 @@ def main():
     os.environ.setdefault("FLIGHT_USER", "admin")
     os.environ.setdefault("FLIGHT_PASSWORD", "secret")
     spark = get_spark(master="local[4]")
-    # per-session table registration — the catalog-injection analogue
+    # table registration, once per service — the catalog-injection analogue
     # (on an Iceberg cluster the catalog is global and this is not needed)
     svc = EngineService(
         spark,

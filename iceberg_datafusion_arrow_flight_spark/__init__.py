@@ -25,8 +25,8 @@ Apache Spark:
   :mod:`.streaming`.
 """
 
-from .session import get_spark, new_session
+from .session import get_spark
 
 __version__ = "0.1.0"
 
-__all__ = ["get_spark", "new_session", "__version__"]
+__all__ = ["get_spark", "__version__"]

@@ -1,4 +1,4 @@
-"""Session-init function registration (SURVEY §2.9, §7.1 step 3).
+"""Dialect function registration, once per service (SURVEY §2.9, §7.1).
 
 The reference registers exactly two custom scalar UDFs per session —
 ``current_schema`` / ``current_database`` reading env with defaults

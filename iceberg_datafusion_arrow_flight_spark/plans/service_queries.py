@@ -50,7 +50,7 @@ GROUP BY l_returnflag, l_linestatus
 def _run_flight_conversation(spark: SparkSession, sf_dir: str,
                              tables: tuple[str, ...], fn):
     """Boot a real gRPC Flight SQL server on an ephemeral port with the
-    given fixture tables registered per-session, run ``fn(client)``, and
+    given fixture tables visible in every session, run ``fn(client)``, and
     tear everything down — the shared chassis for every wire-path
     registry entry."""
     from ..service import EngineService

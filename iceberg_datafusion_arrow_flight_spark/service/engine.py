@@ -6,8 +6,9 @@ Reference parity map (iceberg-datafusion-arrow-flight/src/lib.rs):
 - handshake: Basic creds vs env ``FLIGHT_USER``/``FLIGHT_PASSWORD``
   (lib.rs:223-226, README.md:9-10) → UUIDv4 bearer token (lib.rs:88),
   one isolated engine session per token (``create_ctx`` lib.rs:87-132 →
-  ``spark.newSession()``: shared catalog/cache, isolated temp views,
-  UDFs and conf).
+  a clone of one template session that carries the dialect functions and
+  ``session_init``: shared catalog/cache, isolated temp views, UDFs and
+  conf).
 - prepare: SQL → handle (lib.rs:667-716).  The literal query
   ``"rollback"`` never reaches the planner; it becomes a constant
   single-row result ``rollback='ROLLBACK'`` (lib.rs:677, 683-696 —
@@ -28,8 +29,8 @@ Reference parity map (iceberg-datafusion-arrow-flight/src/lib.rs):
 - close: evict statement + result (lib.rs:718-730).
 
 Everything DataFusion-dialect entering this layer passes through
-:func:`..dialect.rewrite_sql`, and each session gets the SQL-UDF shims —
-so a reference client's SQL works unchanged.
+:func:`..dialect.rewrite_sql`, and each session inherits the SQL-UDF
+shims from the template — so a reference client's SQL works unchanged.
 """
 
 from __future__ import annotations
@@ -93,11 +94,11 @@ class EngineService:
 
     root: SparkSession
     max_cached_results: int = 64
-    # per-session init — the analogue of the reference injecting its
-    # catalog list into every new SessionContext (lib.rs:94-103).  On an
-    # Iceberg deployment the catalog is session-global and this is None;
-    # for temp-view-backed tables pass e.g.
-    # ``lambda s: register_tables(s, sf_dir)``.
+    # init run once per service, on the template every handshake clones
+    # — the analogue of the reference injecting its catalog list into
+    # every new SessionContext (lib.rs:94-103).  On an Iceberg deployment
+    # the catalog is session-global and this is None; for temp-view-backed
+    # tables pass e.g. ``lambda s: register_tables(s, sf_dir)``.
     session_init: Callable[[SparkSession], None] | None = None
     # Iceberg catalog (SqliteCatalog or RestCatalog — same duck type).
     # When set, every handshake registers each catalog table as a view
@@ -112,23 +113,23 @@ class EngineService:
     sessions: dict[str, SparkSession] = field(default_factory=dict)
     statements: dict[str, PreparedStatement] = field(default_factory=dict)
     results: OrderedDict = field(default_factory=OrderedDict)
-    # per-session `SET datafusion.*` values — backs the df_settings
-    # virtual table (the reference enables information_schema incl.
-    # df_settings at lib.rs:92; settings arrive via SessionConfig
-    # env/SET).  Keyed token → {datafusion key → value}.
-    df_overrides: dict[str, dict[str, str]] = field(default_factory=dict)
-    # The gRPC Flight server dispatches calls from a THREAD POOL, so the
-    # shared maps above mutate concurrently; the results OrderedDict is
-    # the dangerous one (move_to_end/popitem race-corrupt its linked
-    # list).  One lock guards all map mutation — Spark execution itself
-    # stays OUTSIDE the lock, so long queries never serialize sessions.
+    # gRPC threads share every map here: each insert, pop and scan holds
+    # this lock (unlocked, a scan racing an insert raises and concurrent
+    # move_to_end/popitem corrupt the OrderedDict).  Spark work stays
+    # OUTSIDE it, so long queries never serialize sessions.
     _lock: threading.Lock = field(default_factory=threading.Lock,
                                   repr=False)
-    # qualified-name → view mapping per token (was a lazy hasattr init —
-    # two concurrent handshakes could both create the dict and one
-    # token's entry would vanish; a dataclass field has no such race)
+    # qualified-name → view mapping per token
     _catalog_names_by_token: dict[str, dict[str, str]] = field(
         default_factory=dict, repr=False)
+
+    def __post_init__(self) -> None:
+        # the template every handshake clones; never changed after this,
+        # as a change would leak into every later session
+        self._template = self.root.newSession()
+        register_dialect_functions(self._template)
+        if self.session_init is not None:
+            self.session_init(self._template)
 
     # ------------------------------------------------------------ auth
     def handshake(self, username: str, password: str) -> str:
@@ -141,13 +142,13 @@ class EngineService:
         if username != exp_user or password != exp_pass:
             raise AuthError("invalid credentials")
         token = str(uuid.uuid4())
-        session = self.root.newSession()
-        register_dialect_functions(session)
-        if self.session_init is not None:
-            self.session_init(session)
+        session = self.root.__class__(
+            self.root.sparkContext,
+            self._template._jsparkSession.cloneSession())
         if self.catalog is not None:
             self._register_catalog_views(session, token)
-        self.sessions[token] = session
+        with self._lock:
+            self.sessions[token] = session
         return token
 
     def _register_catalog_views(self, session: SparkSession,
@@ -163,7 +164,8 @@ class EngineService:
             self.catalog.load_table(ns, name).read(session) \
                 .createOrReplaceTempView(view)
             names[f"{ns}.{name}"] = view
-        self._catalog_names_by_token[token] = names
+        with self._lock:
+            self._catalog_names_by_token[token] = names
 
     def _qualified_names_pass(self, sql: str, token: str) -> str:
         """Rewrite qualified ``ns.table`` identifiers to the caller's
@@ -171,7 +173,7 @@ class EngineService:
         as the dialect passes).  Boundaries exclude '.' so a longer
         dotted spelling (``db.ns.table``) is never corrupted from the
         middle."""
-        names = getattr(self, "_catalog_names_by_token", {}).get(token)
+        names = self._catalog_names_by_token.get(token)
         if not names:
             return sql
         from ..dialect.rewrite import _mask_literals, _unmask_literals
@@ -201,9 +203,9 @@ class EngineService:
                    .replace("current_schema()", f"'{schema}'"))
 
     # ------------------------------------------------- df_settings view
-    def _materialize_df_settings(self, token: str,
-                                 session: SparkSession) -> None:
-        """(Re)build the ``df_settings`` temp view: every mapped
+    def _materialize_df_settings(self, session: SparkSession) -> None:
+        """(Re)build the ``df_settings`` temp view (the reference enables
+        information_schema incl. df_settings at lib.rs:92): every mapped
         DataFusion knob with its CURRENT Spark-side value, overlaid
         with any `SET datafusion.*` this session issued (including
         accepted-and-ignored unmapped keys — faithful to SHOW ALL
@@ -214,7 +216,8 @@ class EngineService:
                 rows[df_key] = str(session.conf.get(spark_key))
             except Exception:
                 rows[df_key] = ""
-        rows.update(self.df_overrides.get(token, {}))
+        rows.update((k, v) for k, v in session.conf.getAll.items()
+                    if k.startswith("datafusion."))
         session.createDataFrame(sorted(rows.items()),
                                 "name STRING, value STRING"
                                 ).createOrReplaceTempView("df_settings")
@@ -298,15 +301,16 @@ class EngineService:
         session = self._session(token)
         handle = str(uuid.uuid4())
         if sql == ROLLBACK_LITERAL:
-            self.statements[handle] = PreparedStatement(
-                token, sql, sql, is_rollback=True)
+            with self._lock:
+                self.statements[handle] = PreparedStatement(
+                    token, sql, sql, is_rollback=True)
             return handle
         # SHOW ALL / SHOW TABLES / SHOW COLUMNS / information_schema —
         # DataFusion answers these from information_schema, enabled in
         # the reference at lib.rs:92; same shapes here.
         if re.match(r"^\s*SHOW\s+ALL\s*;?\s*$", sql, re.IGNORECASE):
             sql = "SELECT name, value FROM df_settings ORDER BY name"
-            self._materialize_df_settings(token, session)
+            self._materialize_df_settings(session)
         elif re.match(r"^\s*SHOW\s+TABLES\s*;?\s*$", sql, re.IGNORECASE):
             sql = ("SELECT table_catalog, table_schema, table_name, "
                    "table_type FROM df_tables ORDER BY table_name")
@@ -327,7 +331,7 @@ class EngineService:
                        re.IGNORECASE):
             sql = re.sub(r"\binformation_schema\.df_settings\b",
                          "df_settings", sql, flags=re.IGNORECASE)
-            self._materialize_df_settings(token, session)
+            self._materialize_df_settings(session)
         translated = rewrite_sql(
             self._qualified_names_pass(self._env_identity_pass(sql), token))
         # parameters are counted OUTSIDE string literals — a literal like
@@ -340,7 +344,8 @@ class EngineService:
             # spark.sql is lazy — .schema runs Catalyst analysis only.
             df = session.sql(translated)
             st.schema = df.schema
-        self.statements[handle] = st
+        with self._lock:
+            self.statements[handle] = st
         return handle
 
     def statement_schema(self, handle: str):
@@ -393,19 +398,17 @@ class EngineService:
         like do_put_prepared_statement_update (lib.rs:645-654).
 
         ``SET datafusion.x = v`` maps through DATAFUSION_CONF_MAP onto
-        the session conf; unmapped DataFusion keys are accepted and
-        ignored (compat)."""
+        the session conf; unmapped keys are accepted and ignored (compat)
+        — each key also lands as-is in the conf, for ``df_settings``."""
         st = self._owned(token, handle)
         session = self._session(token)
         if st.is_rollback:
             return -1
         m = _SET_RE.match(st.raw_sql)
-        if m and m.group(1).lower().startswith("datafusion."):
-            spark_key = DATAFUSION_CONF_MAP.get(m.group(1).lower())
-            if spark_key is not None:
-                session.conf.set(spark_key, m.group(2))
-            self.df_overrides.setdefault(st.token, {})[
-                m.group(1).lower()] = m.group(2)
+        if m and (key := m.group(1).lower()).startswith("datafusion."):
+            if key in DATAFUSION_CONF_MAP:
+                session.conf.set(DATAFUSION_CONF_MAP[key], m.group(2))
+            session.conf.set(key, m.group(2))
             return -1
         self._dataframe(st, session).collect()
         return -1
@@ -431,7 +434,10 @@ class EngineService:
             self.results.pop(handle, None)
 
     def close_session(self, token: str) -> None:
-        self.sessions.pop(token, None)
-        self.df_overrides.pop(token, None)
-        for h in [h for h, s in self.statements.items() if s.token == token]:
-            self.close_prepared_statement(token, h)
+        with self._lock:
+            self.sessions.pop(token, None)
+            self._catalog_names_by_token.pop(token, None)
+            for h in [h for h, s in self.statements.items()
+                      if s.token == token]:
+                del self.statements[h]
+                self.results.pop(h, None)

@@ -4,9 +4,9 @@ Mirrors the reference's session construction (``create_ctx`` at
 iceberg-datafusion-arrow-flight/src/lib.rs:87-132): one root engine context,
 engine tunables taken from the environment (the reference honors
 ``DATAFUSION_*`` env via ``SessionConfig::from_env`` at lib.rs:89 — we honor
-``SPARK_GRAFT_*`` analogues), and per-connection child sessions created with
-``newSession()`` (shared catalog, isolated temp views) — see
-:mod:`.service.sessions`.
+``SPARK_GRAFT_*`` analogues), and per-connection child sessions cloned from
+one template session (shared catalog, isolated temp views) — see
+:mod:`.service.engine`.
 
 Scale posture: these configs are written for a real cluster (AQE on with
 skew-join handling, partition coalescing, broadcast threshold) and merely
@@ -108,10 +108,3 @@ def get_spark(app_name: str = "iceberg-datafusion-arrow-flight-spark",
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel(os.environ.get("SPARK_GRAFT_LOG_LEVEL", "ERROR"))
     return spark
-
-
-def new_session(root: SparkSession) -> SparkSession:
-    """Per-connection isolated session (reference: one ``SessionContext``
-    per bearer token, lib.rs:80,87-132).  Shares the catalog and cached
-    data; isolates temp views, UDFs and conf."""
-    return root.newSession()

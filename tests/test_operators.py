@@ -8,7 +8,6 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from iceberg_datafusion_arrow_flight_spark import new_session
 from iceberg_datafusion_arrow_flight_spark.operators import (
     dedup, multimodal, similarity)
 from iceberg_datafusion_arrow_flight_spark.sources.registry import load_table
@@ -72,13 +71,6 @@ def test_multimodal_real_decode_gated(docs):
     payloads = multimodal.attach_payload(docs).limit(1)
     with pytest.raises(Exception):  # NotImplementedError inside the executor
         multimodal.decode_payloads(payloads, decode_mode="real").collect()
-
-
-def test_new_session_isolates_temp_views(spark):
-    s2 = new_session(spark)
-    spark.range(1).createOrReplaceTempView("only_in_root")
-    assert spark.catalog.tableExists("only_in_root")
-    assert not s2.catalog.tableExists("only_in_root")
 
 
 def test_ivf_recall_vs_brute_force(spark, sf_dir):

@@ -97,15 +97,104 @@ def test_execute_update_returns_minus_one(service):
     assert service.fetch(token, h2).column("x").to_pylist() == [7]
 
 
-def test_session_isolation_between_tokens(service):
+def test_session_isolation_between_tokens(service, spark):
+    spark.range(1).createOrReplaceTempView("only_in_root")
     t1 = service.handshake("admin", "secret")
     t2 = service.handshake("admin", "secret")
+    # a root temp view is invisible to every session
+    assert spark.catalog.tableExists("only_in_root")
+    assert not service.sessions[t1].catalog.tableExists("only_in_root")
     h = service.create_prepared_statement(
         t1, "CREATE OR REPLACE TEMPORARY VIEW iso_v AS SELECT 1 AS x")
     service.execute_update(t1, h)
-    h_bad = service.create_prepared_statement
-    with pytest.raises(Exception):
-        h_bad(t2, "SELECT * FROM iso_v")  # analysis fails: not visible
+    h = service.create_prepared_statement(
+        t1, "SET datafusion.execution.target_partitions = 7")
+    service.execute_update(t1, h)
+    assert service.sessions[t1].conf.get("spark.sql.shuffle.partitions") == "7"
+    # sessions are clones of one template: what t1 changes reaches
+    # neither a sibling nor a session handshaken afterwards
+    t3 = service.handshake("admin", "secret")
+    for other in (t2, t3):
+        assert service.sessions[other].conf.get(
+            "spark.sql.shuffle.partitions") != "7"
+        with pytest.raises(Exception):  # analysis fails: not visible
+            service.create_prepared_statement(other, "SELECT * FROM iso_v")
+
+
+def test_template_built_once_per_service(spark, creds, monkeypatch):
+    """Dialect functions and session_init run once per service, on the
+    template every handshake clones — never per handshake."""
+    from iceberg_datafusion_arrow_flight_spark.service import engine
+
+    calls = {"functions": 0, "init": 0}
+    register = engine.register_dialect_functions
+
+    def counted_register(session):
+        calls["functions"] += 1
+        return register(session)
+
+    def init(session):
+        calls["init"] += 1
+        session.range(3).createOrReplaceTempView("init_v")
+
+    monkeypatch.setattr(engine, "register_dialect_functions",
+                        counted_register)
+    service = EngineService(spark, session_init=init)
+    tokens = [service.handshake("admin", "secret") for _ in range(5)]
+    assert calls == {"functions": 1, "init": 1}
+    for token in tokens:  # session_init's views reach every session
+        h = service.create_prepared_statement(
+            token, "SELECT COUNT(*) AS n FROM init_v")
+        service.execute(token, h)
+        assert service.fetch(token, h).column("n").to_pylist() == [3]
+
+
+def test_functions_resolve_after_use_database(service, spark):
+    token = service.handshake("admin", "secret")
+    try:
+        for sql in ("CREATE DATABASE IF NOT EXISTS svc_use_db",
+                    "USE svc_use_db"):
+            service.execute_update(
+                token, service.create_prepared_statement(token, sql))
+        h = service.create_prepared_statement(
+            token, "SELECT df_strpos('abc', 'c') AS p, gcd(12, 18) AS g")
+        service.execute(token, h)
+        row = service.fetch(token, h).to_pylist()[0]
+        assert (row["p"], row["g"]) == (3, 6)
+    finally:
+        spark.sql("DROP DATABASE IF EXISTS svc_use_db CASCADE")
+
+
+def test_close_session_scan_holds_lock_against_prepare(service):
+    """close_session scans the statements map while gRPC threads insert
+    into it.  The scan below starts a concurrent prepare partway
+    through; without the lock the insert lands mid-iteration and the
+    scan raises "dictionary changed size during iteration"."""
+    import threading
+
+    closing = service.handshake("admin", "secret")
+    other = service.handshake("admin", "secret")
+    for _ in range(2):
+        service.create_prepared_statement(closing, "rollback")
+    threads = []
+
+    class InsertDuringScan(dict):
+        def items(self):
+            it = iter(super().items())
+            yield next(it)
+            th = threading.Thread(target=service.create_prepared_statement,
+                                  args=(other, "rollback"))
+            threads.append(th)
+            th.start()
+            th.join(timeout=0.2)
+            yield from it
+
+    service.statements = InsertDuringScan(service.statements)
+    service.close_session(closing)
+    for th in threads:
+        th.join(timeout=10)
+        assert not th.is_alive()
+    assert [st.token for st in service.statements.values()] == [other]
 
 
 def test_result_cache_lru_bound(service):
@@ -298,9 +387,9 @@ def test_show_tables_and_columns(service):
 
 @pytest.fixture()
 def table_service(spark, sf_dir, creds):
-    """Service whose sessions see the fixture tables (newSession() does
-    not inherit root temp views — the per-session init is the same hook
-    a deployment uses)."""
+    """Service whose sessions see the fixture tables (sessions do not
+    inherit root temp views — session_init is the same hook a deployment
+    uses)."""
     return EngineService(
         spark, session_init=lambda s: register_tables(s, sf_dir))
 
