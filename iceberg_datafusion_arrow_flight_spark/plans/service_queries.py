@@ -186,11 +186,12 @@ WHERE table_name = 'lineitem'
         "DataFusion executes DESCRIBE as an ordinary statement "
         "returning (column_name, data_type, is_nullable) rows "
         "(lib.rs:678 via ctx.sql); the service answers the same shape "
-        "from Catalyst (_materialize_describe).  The oracle reads "
+        "from Catalyst, as a constant Arrow result built at prepare "
+        "(EngineService._engine_result).  The oracle reads "
         "DuckDB's information_schema for the SAME parquet view and "
         "maps its type names onto Spark's simpleString spellings, so "
         "the hash pins name, type, and nullability for every column. "
-        "service/engine.py:_materialize_describe.",
+        "service/engine.py:_engine_result.",
     tags=("service", "catalog"),
 )
 def service_flight_describe(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -212,12 +213,13 @@ SELECT 'physical_plan', TRUE, TRUE, TRUE
         "DataFusion's EXPLAIN returns exactly two rows — "
         "('logical_plan', ...), ('physical_plan', ...) — through the "
         "same statement path (lib.rs:678); the service mirrors that "
-        "shape from Catalyst (_materialize_explain).  Plan TEXT is "
+        "shape from Catalyst, as a constant Arrow result built at "
+        "prepare (EngineService._engine_result).  Plan TEXT is "
         "engine-specific by nature, so the entry hashes the CONTRACT: "
         "the two-row shape plus structural facts that must hold in "
         "any correct engine — each plan is non-empty, reads the "
         "scanned source (Relation/Scan node present), and contains "
-        "the aggregate.  service/engine.py:_materialize_explain.",
+        "the aggregate.  service/engine.py:_engine_result.",
     tags=("service", "diagnostics"),
 )
 def service_flight_explain(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -363,12 +365,12 @@ ORDER BY table_name
         "from the Catalyst catalog with the env-driven database/schema "
         "names.  The conversation registers two session views and must "
         "get exactly those two VIEW rows back — a leak of another "
-        "session's temp views (or the internal df_* materializations) "
+        "session's temp views (or the service's own df_settings view) "
         "fails the hash.  Permanent BASE TABLEs are shared-catalog by "
         "design on both engines (DataFusion's catalog is process-wide "
         "too), so the entry pins the session-view slice and leaves "
         "whatever permanent tables the environment holds out of the "
-        "comparison. service/engine.py:_materialize_tables_view.",
+        "comparison. service/engine.py:_engine_result.",
     tags=("service", "catalog"),
 )
 def service_flight_show_tables(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -9,23 +9,32 @@ Reference parity map (iceberg-datafusion-arrow-flight/src/lib.rs):
   a clone of one template session that carries the dialect functions and
   ``session_init``: shared catalog/cache, isolated temp views, UDFs and
   conf).
-- prepare: SQL → handle (lib.rs:667-716).  The literal query
-  ``"rollback"`` never reaches the planner; it becomes a constant
-  single-row result ``rollback='ROLLBACK'`` (lib.rs:677, 683-696 —
-  transactions don't exist; JDBC clients issuing ROLLBACK get a fake
-  success).  Otherwise the statement is analyzed eagerly (Catalyst
-  analysis ≡ DF ``into_optimized_plan``) and the result schema is
-  available immediately (lib.rs:702-708), except when ``$n`` parameters
-  are present — then analysis defers to bind time.
+- prepare: SQL → handle (lib.rs:667-716); the statement keeps the
+  source of its result, and its Arrow schema is known at once
+  (lib.rs:702-708).  The literal query ``"rollback"`` never reaches the
+  planner; it becomes a constant single-row result
+  ``rollback='ROLLBACK'`` (lib.rs:677, 683-696 — transactions don't
+  exist; JDBC clients issuing ROLLBACK get a fake success).  SHOW ALL /
+  TABLES / COLUMNS, DESCRIBE and EXPLAIN [ANALYZE] are likewise answered
+  as constant Arrow tables, built here.  Any other statement without
+  ``$n`` parameters is parsed and analyzed once, here, like the
+  reference's ``ctx.sql`` (lib.rs:699-700; Catalyst analysis ≡ DF
+  ``into_optimized_plan``), and its DataFrame kept: a DDL/DML statement
+  without parameters therefore runs exactly once, at prepare.  With
+  parameters, planning waits for execute.
 - bind: positional ``$n`` values (lib.rs:601-643, ``with_param_values``
   lib.rs:630-633) → Spark named-parameter binding via the dialect pass.
-- execute: run + materialize the FULL result server-side keyed by handle
-  (lib.rs:332-344) — here as a pyarrow Table (Arrow end-to-end like the
-  reference).  Unlike the reference's unbounded cache (lib.rs:82 — OOM
-  by design at scale), the cache is LRU-bounded and evicts oldest
-  results; SURVEY §7.1 step 7 calls out exactly this fix.
+- execute: optimize and plan the kept analyzed statement afresh — or,
+  with parameters, the statement with its bound values — and
+  materialize the FULL result server-side keyed by handle
+  (lib.rs:332-344) — here as a pyarrow Table (Arrow end-to-end
+  like the reference); a constant result is cached as is.  Unlike the
+  reference's unbounded cache (lib.rs:82 — OOM by design at scale), the
+  cache is LRU-bounded and evicts oldest results; SURVEY §7.1 step 7
+  calls out exactly this fix.
 - execute_update: DDL/DML path; returns -1 like the reference
-  (lib.rs:645-654).
+  (lib.rs:645-654).  A statement with parameters runs here, at each
+  call; one without already ran at prepare.
 - close: evict statement + result (lib.rs:718-730).
 
 Everything DataFusion-dialect entering this layer passes through
@@ -46,9 +55,10 @@ import pyarrow as pa
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..dialect import rewrite_sql, split_params
-from ..dialect.rewrite import find_params
+from ..dialect.rewrite import _mask_literals, _unmask_literals, find_params
 from ..functions import register_dialect_functions
 
 ROLLBACK_LITERAL = "rollback"  # exact match, like lib.rs:677
@@ -71,6 +81,31 @@ DATAFUSION_CONF_MAP: dict[str, str] = {
 _SET_RE = re.compile(
     r"^\s*SET\s+([\w.]+)\s*(?:=|\s+TO\s+)\s*'?([^';]*)'?\s*;?\s*$",
     re.IGNORECASE)
+_SHOW_ALL_RE = re.compile(r"^\s*SHOW\s+ALL\s*;?\s*$", re.IGNORECASE)
+_SHOW_TABLES_RE = re.compile(r"^\s*SHOW\s+TABLES\s*;?\s*$", re.IGNORECASE)
+_SHOW_COLUMNS_RE = re.compile(
+    r"^\s*SHOW\s+COLUMNS\s+FROM\s+([\w.]+)\s*;?\s*$", re.IGNORECASE)
+_DESCRIBE_RE = re.compile(r"^\s*DESCRIBE\s+([A-Za-z_][\w.]*)\s*;?\s*$",
+                          re.IGNORECASE)
+_EXPLAIN_RE = re.compile(r"^\s*EXPLAIN\s+(ANALYZE\s+)?(.+)$",
+                         re.IGNORECASE | re.DOTALL)
+_DF_SETTINGS_RE = re.compile(r"\binformation_schema\.df_settings\b",
+                             re.IGNORECASE)
+
+
+def _env_identity() -> tuple[str, str]:
+    """(current database, current schema): env at call time, defaults
+    'datafusion' / 'public' (lib.rs:106-128, README.md:12)."""
+    return (os.environ.get("CURRENT_DATABASE", "datafusion"),
+            os.environ.get("CURRENT_SCHEMA", "public"))
+
+
+def _strings(names: str, rows: list[tuple]) -> pa.Table:
+    """A constant result: ``rows`` under the ``string`` columns named in
+    ``names`` (space-separated)."""
+    schema = pa.schema([(n, pa.string()) for n in names.split()])
+    return pa.Table.from_pylist([dict(zip(schema.names, r)) for r in rows],
+                                schema=schema)
 
 
 class AuthError(Exception):
@@ -79,13 +114,17 @@ class AuthError(Exception):
 
 @dataclass
 class PreparedStatement:
+    """A prepared statement and the source of its result, fixed at
+    prepare: the engine's own constant answer (``result``), the
+    DataFrame analyzed at prepare (``df``), or neither — a statement with
+    ``$n`` parameters, whose ``translated_sql`` is planned at each
+    execute with the bound ``args``."""
     token: str
     raw_sql: str
     translated_sql: str
-    is_rollback: bool = False
-    has_params: bool = False
     args: dict | None = None
-    schema: object | None = None  # pyspark StructType once analyzed
+    result: pa.Table | None = None
+    df: DataFrame | None = None
 
 
 @dataclass
@@ -167,21 +206,26 @@ class EngineService:
         with self._lock:
             self._catalog_names_by_token[token] = names
 
-    def _qualified_names_pass(self, sql: str, token: str) -> str:
-        """Rewrite qualified ``ns.table`` identifiers to the caller's
-        session views — OUTSIDE string literals (same masking discipline
-        as the dialect passes).  Boundaries exclude '.' so a longer
-        dotted spelling (``db.ns.table``) is never corrupted from the
-        middle."""
-        names = self._catalog_names_by_token.get(token)
-        if not names:
-            return sql
-        from ..dialect.rewrite import _mask_literals, _unmask_literals
+    def _service_passes(self, sql: str, token: str) -> str:
+        """The service's two textual passes, OUTSIDE string literals (same
+        masking discipline as the dialect passes):
+
+        - qualified ``ns.table`` identifiers → the caller's session views.
+          Boundaries exclude '.' so a longer dotted spelling
+          (``db.ns.table``) is never corrupted from the middle.
+        - ``current_database()`` / ``current_schema()`` → the env-driven
+          values.  The reference's two custom UDFs read env at call time
+          (lib.rs:106-128, udf.rs:23-104); Spark's builtins answer from
+          the catalog."""
         masked, saved = _mask_literals(sql)
-        for qualified, view in names.items():
+        for qualified, view in self._catalog_names_by_token.get(
+                token, {}).items():
             masked = re.sub(
                 rf"(?<![\w.]){re.escape(qualified)}(?![\w.])",
                 view, masked)
+        db, schema = _env_identity()
+        masked = (masked.replace("current_database()", f"'{db}'")
+                        .replace("current_schema()", f"'{schema}'"))
         return _unmask_literals(masked, saved)
 
     def _session(self, token: str) -> SparkSession:
@@ -190,26 +234,16 @@ class EngineService:
         except KeyError:
             raise AuthError(f"unknown token: {token}") from None
 
-    # ------------------------------------------------- current db/schema
-    # The reference's two custom UDFs read env at call time with defaults
-    # 'datafusion' / 'public' (lib.rs:106-128, udf.rs:23-104,
-    # README.md:12).  Spark's builtin current_database() answers from the
-    # catalog, so the service substitutes the env-driven values textually.
+    # ------------------------------------------ statements answered here
     @staticmethod
-    def _env_identity_pass(sql: str) -> str:
-        db = os.environ.get("CURRENT_DATABASE", "datafusion")
-        schema = os.environ.get("CURRENT_SCHEMA", "public")
-        return (sql.replace("current_database()", f"'{db}'")
-                   .replace("current_schema()", f"'{schema}'"))
-
-    # ------------------------------------------------- df_settings view
-    def _materialize_df_settings(self, session: SparkSession) -> None:
-        """(Re)build the ``df_settings`` temp view (the reference enables
+    def _df_settings_rows(session: SparkSession) -> list[tuple[str, str]]:
+        """(name, value) rows of SHOW ALL and
+        ``information_schema.df_settings`` (the reference enables
         information_schema incl. df_settings at lib.rs:92): every mapped
-        DataFusion knob with its CURRENT Spark-side value, overlaid
-        with any `SET datafusion.*` this session issued (including
-        accepted-and-ignored unmapped keys — faithful to SHOW ALL
-        listing whatever was set)."""
+        DataFusion knob with its CURRENT Spark-side value, overlaid with
+        any `SET datafusion.*` this session issued (including
+        accepted-and-ignored unmapped keys — faithful to SHOW ALL listing
+        whatever was set), sorted by name."""
         rows = {}
         for df_key, spark_key in DATAFUSION_CONF_MAP.items():
             try:
@@ -218,138 +252,100 @@ class EngineService:
                 rows[df_key] = ""
         rows.update((k, v) for k, v in session.conf.getAll.items()
                     if k.startswith("datafusion."))
-        session.createDataFrame(sorted(rows.items()),
-                                "name STRING, value STRING"
-                                ).createOrReplaceTempView("df_settings")
+        return sorted(rows.items())
 
-    # --------------------------------------------- SHOW TABLES / COLUMNS
-    def _materialize_tables_view(self, session: SparkSession) -> None:
-        """``df_tables`` temp view in DataFusion's information_schema
-        .tables shape (the reference enables information_schema at
-        lib.rs:92; DataFusion's SHOW TABLES reads it)."""
-        db = os.environ.get("CURRENT_DATABASE", "datafusion")
-        schema = os.environ.get("CURRENT_SCHEMA", "public")
-        rows = [(db, schema, t.name,
-                 "VIEW" if t.tableType in ("TEMPORARY", "VIEW")
-                 else "BASE TABLE")
-                for t in session.catalog.listTables()
-                if t.name not in ("df_tables", "df_columns", "df_settings")]
-        session.createDataFrame(
-            rows or [("", "", "", "")],
-            "table_catalog STRING, table_schema STRING, "
-            "table_name STRING, table_type STRING"
-        ).where("table_name <> ''").createOrReplaceTempView("df_tables")
+    def _columns(self, token: str, session: SparkSession,
+                 name: str) -> list[tuple[str, str, str]]:
+        """(column_name, data_type, is_nullable) of a table or view, its
+        name resolved like any statement's (qualified catalog names)."""
+        fields = session.table(self._service_passes(name, token)).schema.fields
+        return [(f.name, f.dataType.simpleString(),
+                 "YES" if f.nullable else "NO") for f in fields]
 
-    def _materialize_columns_view(self, session: SparkSession,
-                                  table_name: str) -> None:
-        db = os.environ.get("CURRENT_DATABASE", "datafusion")
-        schema = os.environ.get("CURRENT_SCHEMA", "public")
-        fields = session.table(table_name).schema.fields
-        session.createDataFrame(
-            [(db, schema, table_name, f.name, f.dataType.simpleString(),
-              "YES" if f.nullable else "NO") for f in fields],
-            "table_catalog STRING, table_schema STRING, table_name STRING, "
-            "column_name STRING, data_type STRING, is_nullable STRING"
-        ).createOrReplaceTempView("df_columns")
-
-    _SHOW_COLUMNS_RE = re.compile(
-        r"^\s*SHOW\s+COLUMNS\s+FROM\s+([\w.]+)\s*;?\s*$", re.IGNORECASE)
-
-    # ------------------------------------------- EXPLAIN / DESCRIBE shims
-    # DataFusion executes both as ordinary statements through ctx.sql
-    # (lib.rs:678): EXPLAIN returns (plan_type, plan) rows —
-    # 'logical_plan' + 'physical_plan', or 'Plan with Metrics' for
-    # EXPLAIN ANALYZE (which executes the query) — and DESCRIBE returns
-    # (column_name, data_type, is_nullable).  Same shapes here, answered
-    # from Catalyst.
-    def _materialize_explain(self, token: str, session: SparkSession,
-                             analyze: bool, inner_sql: str,
-                             handle: str) -> str:
-        translated = rewrite_sql(self._qualified_names_pass(
-            self._env_identity_pass(inner_sql), token))
-        df = session.sql(translated)
-        qe = df._jdf.queryExecution()
-        if analyze:
-            df.collect()  # EXPLAIN ANALYZE runs the plan, like DF
-            rows = [("Plan with Metrics",
-                     qe.executedPlan().toString())]
-        else:
-            rows = [("logical_plan", qe.optimizedPlan().toString()),
-                    ("physical_plan", qe.executedPlan().toString())]
-        # per-HANDLE view: interleaved prepares on one session must not
-        # clobber each other's results between prepare and execute
-        view = f"df_explain_{handle.replace('-', '')[:16]}"
-        session.createDataFrame(rows, "plan_type STRING, plan STRING") \
-            .createOrReplaceTempView(view)
-        return f"SELECT plan_type, plan FROM {view}"
-
-    def _materialize_describe(self, token: str, session: SparkSession,
-                              name: str, handle: str) -> str:
-        resolved = self._qualified_names_pass(name, token)
-        fields = session.table(resolved).schema.fields
-        view = f"df_describe_{handle.replace('-', '')[:16]}"
-        session.createDataFrame(
-            [(f.name, f.dataType.simpleString(),
-              "YES" if f.nullable else "NO") for f in fields],
-            "column_name STRING, data_type STRING, is_nullable STRING"
-        ).createOrReplaceTempView(view)
-        return ("SELECT column_name, data_type, is_nullable "
-                f"FROM {view}")
+    def _engine_result(self, token: str, session: SparkSession,
+                       sql: str) -> pa.Table | None:
+        """The constant result of a statement the engine answers itself,
+        in DataFusion's shape; None for any other statement.  DataFusion
+        answers SHOW from information_schema (enabled in the reference at
+        lib.rs:92) and runs EXPLAIN / DESCRIBE through ctx.sql
+        (lib.rs:678): EXPLAIN returns (plan_type, plan) rows —
+        'logical_plan' + 'physical_plan', or 'Plan with Metrics' for
+        EXPLAIN ANALYZE (which executes the query) — and DESCRIBE returns
+        (column_name, data_type, is_nullable), here from Catalyst."""
+        if sql == ROLLBACK_LITERAL:
+            return _strings("rollback", [("ROLLBACK",)])
+        if _SHOW_ALL_RE.match(sql):
+            return _strings("name value", self._df_settings_rows(session))
+        db, schema = _env_identity()
+        if _SHOW_TABLES_RE.match(sql):
+            rows = [(db, schema, t.name,
+                     "VIEW" if t.tableType in ("TEMPORARY", "VIEW")
+                     else "BASE TABLE")
+                    for t in session.catalog.listTables()
+                    if t.name != "df_settings"]
+            return _strings("table_catalog table_schema table_name "
+                            "table_type", sorted(rows, key=lambda r: r[2]))
+        if m := _SHOW_COLUMNS_RE.match(sql):
+            return _strings(
+                "table_catalog table_schema table_name column_name "
+                "data_type is_nullable",
+                [(db, schema, m.group(1), *c)
+                 for c in self._columns(token, session, m.group(1))])
+        if m := _DESCRIBE_RE.match(sql):
+            return _strings("column_name data_type is_nullable",
+                            self._columns(token, session, m.group(1)))
+        if m := _EXPLAIN_RE.match(sql):
+            df = session.sql(rewrite_sql(
+                self._service_passes(m.group(2), token)))
+            qe = df._jdf.queryExecution()
+            if m.group(1):
+                df.collect()  # EXPLAIN ANALYZE runs the plan, like DF
+                rows = [("Plan with Metrics", qe.executedPlan().toString())]
+            else:
+                rows = [("logical_plan", qe.optimizedPlan().toString()),
+                        ("physical_plan", qe.executedPlan().toString())]
+            return _strings("plan_type plan", rows)
+        return None
 
     # ------------------------------------------------------------ prepare
     def create_prepared_statement(self, token: str, sql: str) -> str:
+        """Prepare ``sql``, keeping the source of its result.  Spark runs
+        commands (DDL, DML, CACHE) inside ``sql()``, so a statement
+        without ``$n`` parameters runs here, once; for a query this is
+        Catalyst analysis only."""
         session = self._session(token)
         handle = str(uuid.uuid4())
-        if sql == ROLLBACK_LITERAL:
-            with self._lock:
-                self.statements[handle] = PreparedStatement(
-                    token, sql, sql, is_rollback=True)
-            return handle
-        # SHOW ALL / SHOW TABLES / SHOW COLUMNS / information_schema —
-        # DataFusion answers these from information_schema, enabled in
-        # the reference at lib.rs:92; same shapes here.
-        if re.match(r"^\s*SHOW\s+ALL\s*;?\s*$", sql, re.IGNORECASE):
-            sql = "SELECT name, value FROM df_settings ORDER BY name"
-            self._materialize_df_settings(session)
-        elif re.match(r"^\s*SHOW\s+TABLES\s*;?\s*$", sql, re.IGNORECASE):
-            sql = ("SELECT table_catalog, table_schema, table_name, "
-                   "table_type FROM df_tables ORDER BY table_name")
-            self._materialize_tables_view(session)
-        elif (m_cols := self._SHOW_COLUMNS_RE.match(sql)):
-            sql = ("SELECT table_catalog, table_schema, table_name, "
-                   "column_name, data_type, is_nullable FROM df_columns")
-            self._materialize_columns_view(session, m_cols.group(1))
-        elif (m_ex := re.match(r"^\s*EXPLAIN\s+(ANALYZE\s+)?(.+)$", sql,
-                               re.IGNORECASE | re.DOTALL)):
-            sql = self._materialize_explain(
-                token, session, bool(m_ex.group(1)), m_ex.group(2), handle)
-        elif (m_desc := re.match(r"^\s*DESCRIBE\s+([A-Za-z_][\w.]*)\s*;?\s*$",
-                                 sql, re.IGNORECASE)):
-            sql = self._materialize_describe(token, session,
-                                             m_desc.group(1), handle)
-        elif re.search(r"\binformation_schema\.df_settings\b", sql,
-                       re.IGNORECASE):
-            sql = re.sub(r"\binformation_schema\.df_settings\b",
-                         "df_settings", sql, flags=re.IGNORECASE)
-            self._materialize_df_settings(session)
-        translated = rewrite_sql(
-            self._qualified_names_pass(self._env_identity_pass(sql), token))
-        # parameters are counted OUTSIDE string literals — a literal like
-        # 'costs $5' must not defer schema analysis (ADVICE r1)
-        has_params = bool(find_params(sql))
-        st = PreparedStatement(token, sql, translated, has_params=has_params)
-        if not has_params:
-            # eager analysis: schema available at prepare time, like the
-            # reference shipping the plan schema (lib.rs:702-708);
-            # spark.sql is lazy — .schema runs Catalyst analysis only.
-            df = session.sql(translated)
-            st.schema = df.schema
+        result = self._engine_result(token, session, sql)
+        if result is not None:
+            st = PreparedStatement(token, sql, sql, result=result)
+        else:
+            if _DF_SETTINGS_RE.search(sql):
+                # the client's own SQL runs over the settings, so this
+                # spelling alone reads them through a temp view
+                session.createDataFrame(self._df_settings_rows(session),
+                                        "name STRING, value STRING"
+                                        ).createOrReplaceTempView("df_settings")
+                sql = _DF_SETTINGS_RE.sub("df_settings", sql)
+            translated = rewrite_sql(self._service_passes(sql, token))
+            st = PreparedStatement(token, sql, translated)
+            # parameters are counted OUTSIDE string literals — a literal
+            # like 'costs $5' must not defer analysis (ADVICE r1)
+            if not find_params(sql):
+                st.df = session.sql(translated)
         with self._lock:
             self.statements[handle] = st
         return handle
 
-    def statement_schema(self, handle: str):
-        return self.statements[handle].schema
+    def statement_schema(self, handle: str) -> pa.Schema | None:
+        """The result's Arrow schema, known at prepare like the schema the
+        reference ships (lib.rs:702-708); None while analysis waits for
+        bound parameters."""
+        st = self.statements[handle]
+        if st.result is not None:
+            return st.result.schema
+        if st.df is not None:
+            return to_arrow_schema(st.df.schema)
+        return None
 
     def _owned(self, token: str, handle: str) -> PreparedStatement:
         """Resolve a handle AND verify it belongs to the caller's session
@@ -370,9 +366,15 @@ class EngineService:
     # ------------------------------------------------------------ execute
     def _dataframe(self, st: PreparedStatement,
                    session: SparkSession) -> DataFrame:
-        if st.args is not None:
-            return session.sql(st.translated_sql, args=st.args)
-        return session.sql(st.translated_sql)
+        """A Dataset over the plan analyzed at prepare, or — with ``$n``
+        parameters — the statement planned now with its bound values."""
+        if st.df is not None:
+            # a new Dataset is optimized and planned afresh, as the
+            # reference plans its stored logical plan at each execute;
+            # re-running the kept one would reuse its file listing and
+            # shuffle output and miss writes made since the last execute
+            return st.df.select("*")
+        return session.sql(st.translated_sql, args=st.args)
 
     def execute(self, token: str, handle: str) -> str:
         """Run the statement, cache the FULL result (Arrow), return the
@@ -380,12 +382,9 @@ class EngineService:
         lib.rs:351-361)."""
         st = self._owned(token, handle)
         session = self._session(token)
-        if st.is_rollback:
-            table = pa.table({"rollback": pa.array(["ROLLBACK"], pa.string())})
-        else:
-            df = self._dataframe(st, session)
-            st.schema = df.schema
-            table = df.toArrow()
+        table = st.result
+        if table is None:
+            table = self._dataframe(st, session).toArrow()
         with self._lock:
             self.results[handle] = table
             self.results.move_to_end(handle)
@@ -394,23 +393,24 @@ class EngineService:
         return handle
 
     def execute_update(self, token: str, handle: str) -> int:
-        """DDL / SET / DML path — executes the side effect, returns -1
-        like do_put_prepared_statement_update (lib.rs:645-654).
+        """DDL / SET / DML path — returns -1 like
+        do_put_prepared_statement_update (lib.rs:645-654).  A statement
+        without parameters already ran at prepare (collecting a command's
+        DataFrame reads its stored output, it does not run it again); one
+        with parameters runs here.
 
         ``SET datafusion.x = v`` maps through DATAFUSION_CONF_MAP onto
         the session conf; unmapped keys are accepted and ignored (compat)
         — each key also lands as-is in the conf, for ``df_settings``."""
         st = self._owned(token, handle)
         session = self._session(token)
-        if st.is_rollback:
-            return -1
         m = _SET_RE.match(st.raw_sql)
         if m and (key := m.group(1).lower()).startswith("datafusion."):
             if key in DATAFUSION_CONF_MAP:
                 session.conf.set(DATAFUSION_CONF_MAP[key], m.group(2))
             session.conf.set(key, m.group(2))
-            return -1
-        self._dataframe(st, session).collect()
+        elif st.result is None:
+            self._dataframe(st, session).collect()
         return -1
 
     # ------------------------------------------------------------ fetch

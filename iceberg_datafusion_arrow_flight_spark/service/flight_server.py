@@ -25,14 +25,11 @@ SURVEY §2.12):
   382-482, 732-788), so a client porting over sees the identical surface.
 
 Protobuf encode/decode is :mod:`.flightsql_proto` (pure-Python wire
-format; no protobuf dependency exists in this environment).  The
-pre-protocol JSON/raw-handle forms from round 1 remain as a documented
-legacy fallback for non-Flight-SQL clients.
+format; no protobuf dependency exists in this environment).
 """
 
 from __future__ import annotations
 
-import json
 import threading
 
 import pyarrow as pa
@@ -101,17 +98,14 @@ class SparkFlightServer(flight.FlightServerBase):
         """Dataset schema as Arrow IPC bytes (SchemaAsIpc, lib.rs:704-708);
         empty when analysis is deferred (parameterized statement)."""
         schema = self.service.statement_schema(handle)
-        if schema is None:
-            return b""
-        from pyspark.sql.pandas.types import to_arrow_schema
-        return to_arrow_schema(schema).serialize().to_pybytes()
+        return b"" if schema is None else schema.serialize().to_pybytes()
 
     # --------------------------------------------------------- actions
     def do_action(self, context, action):
         token = self._token(context)
         raw = action.body.to_pybytes() if action.body else b""
-        # ---- Flight SQL protocol (arrow-rs FlightSqlService action
-        # names; payloads are Any-wrapped protobuf messages)
+        # arrow-rs FlightSqlService action names; payloads are Any-wrapped
+        # protobuf messages
         if action.type == "CreatePreparedStatement":
             name, fields = unpack_any(raw)
             if name != "ActionCreatePreparedStatementRequest":
@@ -140,21 +134,6 @@ class SparkFlightServer(flight.FlightServerBase):
             # explicitly unimplemented in the reference
             raise flight.FlightServerError(
                 f"Implement do_action_{action.type}")
-        # ---- legacy JSON action names (round-1 clients)
-        body = raw.decode()
-        if action.type == "create_prepared_statement":
-            handle = self.service.create_prepared_statement(token, body)
-            schema = self.service.statement_schema(handle)
-            import base64
-            ipc = self._schema_ipc(handle)
-            payload = {"handle": handle,
-                       "schema": schema.json() if schema is not None else None,
-                       "dataset_schema_ipc":
-                           base64.b64encode(ipc).decode() if ipc else None}
-            return [json.dumps(payload).encode()]
-        if action.type == "close_prepared_statement":
-            self.service.close_prepared_statement(token, body)
-            return []
         raise flight.FlightServerError(
             f"action {action.type!r} not implemented "
             "(matches reference unimplemented surface, lib.rs:732-788)")
@@ -164,9 +143,7 @@ class SparkFlightServer(flight.FlightServerBase):
                  "Any(ActionCreatePreparedStatementRequest) -> "
                  "Any(ActionCreatePreparedStatementResult)"),
                 ("ClosePreparedStatement",
-                 "Any(ActionClosePreparedStatementRequest)"),
-                ("create_prepared_statement", "legacy: SQL text -> handle"),
-                ("close_prepared_statement", "legacy: evict handle")]
+                 "Any(ActionClosePreparedStatementRequest)")]
 
     # --------------------------------------------------------- bind
     @staticmethod
@@ -181,7 +158,6 @@ class SparkFlightServer(flight.FlightServerBase):
     def do_put(self, context, descriptor, reader, writer):
         token = self._token(context)
         name, fields = unpack_any(descriptor.command)
-        # ---- Flight SQL protocol
         if name == "CommandPreparedStatementQuery":
             handle = fields["prepared_statement_handle"].decode()
             values = self._param_values(reader.read_all())
@@ -209,10 +185,8 @@ class SparkFlightServer(flight.FlightServerBase):
         if name == "CommandStatementSubstraitPlan":  # pragma: no cover
             raise flight.FlightServerError(
                 "Implement do_put_prepared_statement_update")  # lib.rs:656-665
-        # ---- legacy: raw handle as descriptor command
-        handle = descriptor.command.decode()
-        self.service.bind_parameters(
-            token, handle, self._param_values(reader.read_all()))
+        raise flight.FlightServerError(
+            f"Implement do_put for {name or 'an unknown command'}")
 
     # --------------------------------------------------------- execute
     def get_flight_info(self, context, descriptor):
@@ -233,10 +207,9 @@ class SparkFlightServer(flight.FlightServerBase):
             # information_schema SQL instead — supported here too)
             raise flight.FlightServerError(
                 f"Implement get_flight_info_{name.removeprefix('CommandGet').lower()}")
-        elif name is not None:
-            raise flight.FlightServerError(f"Implement get_flight_info for {name}")
         else:
-            handle = descriptor.command.decode()  # legacy raw handle
+            raise flight.FlightServerError(
+                f"Implement get_flight_info for {name or 'an unknown command'}")
         ticket_handle = self.service.execute(token, handle)
         table = self.service.fetch(token, ticket_handle)
         # ticket = Any-wrapped FetchResults{handle}, byte-compatible with
@@ -255,12 +228,10 @@ class SparkFlightServer(flight.FlightServerBase):
             handle = fields["handle"]
         elif name == "TicketStatementQuery":
             handle = fields["statement_handle"].decode()
-        elif name is not None:
-            # lib.rs:266-271: any other Any payload is rejected
+        else:
+            # lib.rs:266-271: any other payload is rejected
             raise flight.FlightServerError(
                 f"do_get: The defined request is invalid: {PbAny.decode(raw).type_url}")
-        else:
-            handle = raw.decode()  # legacy raw handle
         try:
             table = self.service.fetch(self._token(context), handle)
         except AuthError as exc:

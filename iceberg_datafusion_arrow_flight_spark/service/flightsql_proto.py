@@ -267,7 +267,7 @@ def pack_any(name: str, **values) -> bytes:
 def unpack_any(buf: bytes) -> tuple[str | None, dict[str, object]]:
     """Decode an Any-wrapped payload → (message name, fields).  Returns
     (None, {}) when the bytes are not an Any of a known Flight SQL
-    message (callers fall back to legacy behavior)."""
+    message (callers reject it like any other unknown command)."""
     try:
         a = Any.decode(buf)
     except Exception:

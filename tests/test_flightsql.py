@@ -87,7 +87,7 @@ def test_unknown_fields_skipped_and_garbage_rejected():
     buf = b"\x4a\x03xyz" + encode_message("CommandStatementQuery",
                                           {"query": "q"})
     assert decode_message("CommandStatementQuery", buf)["query"] == "q"
-    # a raw UUID handle is not a known Any → legacy fallback signal
+    # a raw UUID handle is not a known Any → rejected as unknown
     name, _ = unpack_any(b"550e8400-e29b-41d4-a716-446655440000")
     assert name is None
 

@@ -133,6 +133,13 @@ def test_flight_service_reads_catalog_tables(spark, backing, served,
     row = res.to_pylist()[0]
     assert row["n"] == 8
     assert row["lit"] == "sales.items"  # literal NOT rewritten
+    # SHOW COLUMNS resolves the qualified name like DESCRIBE does
+    described, shown = (
+        svc.results[svc.execute(tok1, svc.create_prepared_statement(
+            tok1, sql))].select(["column_name", "data_type", "is_nullable"])
+        for sql in ("DESCRIBE sales.items", "SHOW COLUMNS FROM sales.items"))
+    assert described.column("column_name").to_pylist() == ["id", "v"]
+    assert shown.equals(described)
 
     # commit after handshake: session 1 keeps its snapshot…
     rest.load_table("sales", "items").append(

@@ -60,6 +60,9 @@ def test_rollback_special_case(service):
     result, never touches the planner."""
     token = service.handshake("admin", "secret")
     handle = service.create_prepared_statement(token, "rollback")
+    # its schema ships at prepare like any other statement's
+    assert service.statement_schema(handle) == pa.schema(
+        [("rollback", pa.string())])
     service.execute(token, handle)
     table = service.fetch(token, handle)
     assert table.column_names == ["rollback"]
@@ -226,59 +229,84 @@ def test_current_database_env_override(service, monkeypatch):
         token, "SELECT current_database() AS d")
     service.execute(token, h2)
     assert service.fetch(token, h2).column("d").to_pylist() == ["mydb"]
+    # inside a string literal the call is text, not substituted
+    h3 = service.create_prepared_statement(
+        token, "SELECT 'current_database()' AS s")
+    service.execute(token, h3)
+    assert service.fetch(token, h3).column("s").to_pylist() == [
+        "current_database()"]
+
+
+def test_ddl_and_dml_without_parameters_run_once(service, spark, tmp_path):
+    """A statement without parameters is planned, and so run, once at
+    prepare (lib.rs:699-700); execute_update must not run it again."""
+    token = service.handshake("admin", "secret")
+
+    def update(sql):
+        h = service.create_prepared_statement(token, sql)
+        assert service.execute_update(token, h) == -1
+
+    def count(h):
+        return service.fetch(token, service.execute(token, h)).column(
+            "n").to_pylist()
+
+    try:
+        update("CREATE TABLE IF NOT EXISTS once_t (x INT) USING parquet "
+               f"LOCATION '{tmp_path / 'once_t'}'")
+        h = service.create_prepared_statement(
+            token, "SELECT COUNT(*) AS n FROM once_t")
+        assert count(h) == [0]
+        update("INSERT INTO once_t VALUES (1)")
+        # executed again, the prepared query sees the write
+        assert count(h) == [1]
+        # without IF NOT EXISTS: a second run would find the table
+        update("CREATE TABLE once_t2 (x INT) USING parquet "
+               f"LOCATION '{tmp_path / 'once_t2'}'")
+        assert spark.catalog.tableExists("once_t2")
+    finally:
+        spark.sql("DROP TABLE IF EXISTS once_t")
+        spark.sql("DROP TABLE IF EXISTS once_t2")
 
 
 # ----------------------------------------------------------------- flight
-def test_flight_server_end_to_end(spark, creds):
+def test_flight_server_rejects_legacy_surface(spark, creds):
+    """Only Flight SQL messages are served: a JSON action name, or a raw
+    handle as descriptor or ticket, is rejected like any other unknown
+    command — even when the handle names a live statement."""
     fl = pytest.importorskip("pyarrow.flight")
     from iceberg_datafusion_arrow_flight_spark.service.flight_server import (
-        SparkFlightServer)
+        serve_background)
+    from iceberg_datafusion_arrow_flight_spark.service.flightsql_client import (
+        FlightSqlClient)
 
-    service = EngineService(spark)
-    server = SparkFlightServer(service, "grpc://127.0.0.1:0")
+    server, _ = serve_background(EngineService(spark), port=0)
     try:
-        client = fl.connect(f"grpc://127.0.0.1:{server.port}")
-        client.authenticate(_BasicClientAuth("admin", "secret"))
-        import json
-        res = list(client.do_action(
-            fl.Action("create_prepared_statement",
-                      b"SELECT 1::bigint AS one")))
-        payload = json.loads(res[0].body.to_pybytes())
-        handle = payload["handle"]
-        assert payload["schema"] is not None
-        # schema round-trips through Arrow IPC like the reference
-        import base64 as _b64
-        import pyarrow.ipc  # noqa: F401
-        ipc_schema = pa.ipc.read_schema(
-            pa.BufferReader(_b64.b64decode(payload["dataset_schema_ipc"])))
-        assert ipc_schema.names == ["one"]
-        info = client.get_flight_info(
-            fl.FlightDescriptor.for_command(handle.encode()))
-        table = client.do_get(info.endpoints[0].ticket).read_all()
-        assert table.column("one").to_pylist() == [1]
-        list(client.do_action(fl.Action("close_prepared_statement",
-                                        handle.encode())))
+        c = FlightSqlClient(f"grpc://localhost:{server.port}",
+                            "admin", "secret")
+        st = c.prepare("SELECT 1 AS one")
+        raw = st.handle.encode()
+        assert [a.type for a in c.client.list_actions()] == [
+            "CreatePreparedStatement", "ClosePreparedStatement"]
+        with pytest.raises(fl.FlightServerError, match="not implemented"):
+            list(c.client.do_action(
+                fl.Action("create_prepared_statement", b"SELECT 1")))
+        with pytest.raises(fl.FlightServerError,
+                           match="Implement get_flight_info"):
+            c.client.get_flight_info(fl.FlightDescriptor.for_command(raw))
+        with pytest.raises(fl.FlightServerError,
+                           match="The defined request is invalid"):
+            c.client.do_get(fl.Ticket(raw)).read_all()
+        batch = pa.table({"p1": [1]})
+        writer, _ = c.client.do_put(fl.FlightDescriptor.for_command(raw),
+                                    batch.schema)
+        with pytest.raises(fl.FlightServerError, match="Implement do_put"):
+            writer.write_table(batch)
+            writer.close()
+        # the statement itself is untouched and runs over Flight SQL
+        assert c.execute(st).column("one").to_pylist() == [1]
+        c.close(st)
     finally:
         server.shutdown()
-
-
-try:
-    import pyarrow.flight as _fl
-
-    class _BasicClientAuth(_fl.ClientAuthHandler):
-        def __init__(self, username, password):
-            super().__init__()
-            self.basic = _fl.BasicAuth(username, password)
-            self.token = b""
-
-        def authenticate(self, outgoing, incoming):
-            outgoing.write(self.basic.serialize())
-            self.token = incoming.read()
-
-        def get_token(self):
-            return self.token
-except ImportError:  # pragma: no cover
-    pass
 
 
 def test_set_statement_maps_datafusion_conf(service):
@@ -365,24 +393,44 @@ def test_show_tables_and_columns(service):
     information_schema (enabled in the reference, lib.rs:92) — same
     spellings and output shapes here."""
     token = service.handshake("admin", "secret")
-    h = service.create_prepared_statement(
-        token, "CREATE OR REPLACE TEMPORARY VIEW shown_v AS "
-               "SELECT 1 AS a, 'x' AS b")
-    service.execute_update(token, h)
+    session = service.sessions[token]
+    for view, body in (("shown_v", "SELECT 1 AS a, 'x' AS b"),
+                       ("other_v", "SELECT CAST(2 AS BIGINT) AS c")):
+        h = service.create_prepared_statement(
+            token, f"CREATE OR REPLACE TEMPORARY VIEW {view} AS {body}")
+        service.execute_update(token, h)
+
+    def temp_views():
+        return {t.name for t in session.catalog.listTables()
+                if t.isTemporary}
+
+    views = temp_views()
+    # answering EXPLAIN / DESCRIBE leaves nothing behind in the session
+    for sql in ("EXPLAIN SELECT 1", "DESCRIBE shown_v"):
+        h = service.create_prepared_statement(token, sql)
+        service.execute(token, h)
+        service.close_prepared_statement(token, h)
     t1 = service.execute(token,
                          service.create_prepared_statement(token,
                                                            "SHOW TABLES"))
     tables = service.fetch(token, t1).to_pylist()
-    assert any(r["table_name"] == "shown_v" and r["table_type"] == "VIEW"
-               for r in tables)
+    assert [r["table_name"] for r in tables if r["table_type"] == "VIEW"] \
+        == ["other_v", "shown_v"]
     assert all(set(r) == {"table_catalog", "table_schema", "table_name",
                           "table_type"} for r in tables)
-    t2 = service.execute(token, service.create_prepared_statement(
-        token, "SHOW COLUMNS FROM shown_v"))
-    cols = service.fetch(token, t2).to_pylist()
+    # interleaved prepares each keep their own table's columns
+    h_shown = service.create_prepared_statement(
+        token, "SHOW COLUMNS FROM shown_v")
+    h_other = service.create_prepared_statement(
+        token, "SHOW COLUMNS FROM other_v")
+    cols = service.fetch(token, service.execute(token, h_shown)).to_pylist()
     assert [(c["column_name"], c["data_type"]) for c in cols] == \
         [("a", "int"), ("b", "string")]
     assert all(c["is_nullable"] in ("YES", "NO") for c in cols)
+    other = service.fetch(token, service.execute(token, h_other)).to_pylist()
+    assert [(c["table_name"], c["column_name"], c["data_type"])
+            for c in other] == [("other_v", "c", "bigint")]
+    assert temp_views() == views
 
 
 @pytest.fixture()
