@@ -35,9 +35,11 @@ exercises:
   bounds).  Everything else round-trips the spec shape.
 
 Scale: the data path is pure Spark — ``df.write.parquet`` on the executors,
-``spark.read.parquet(paths)`` on read; only file *names and stats* pass
-through the committer (KB per snapshot, like Iceberg's manifest lists), so
-a 100 TB table costs the driver the same as a 100 MB one.  ``plan_files``
+``spark.read.schema(<write schema from metadata>).parquet(paths)`` on read
+(the schema is never inferred from the files, so building a read plan runs
+no Spark job); only file *names and stats* pass through the committer
+(KB per snapshot, like Iceberg's manifest lists), so a 100 TB table costs
+the driver the same as a 100 MB one.  ``plan_files``
 does manifest-level min/max pruning, the same skip-scan Iceberg's
 ``ManifestEvaluator`` performs, so selective reads open a subset of files.
 """
@@ -57,6 +59,7 @@ from dataclasses import field as dataclass_field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType
 
 __all__ = [
     "SqliteCatalog",
@@ -363,6 +366,18 @@ class IcebergTable:
                          else metadata["current-snapshot-id"])
         else:
             parent_id = metadata["current-snapshot-id"]
+        # Reads trust metadata (each file is read under the schema it is
+        # stamped with), so a frame that does not match the current
+        # schema by (name, type) is refused before any file is written.
+        fields = _schema_of(metadata, metadata["current-schema-id"])
+        want = DataType.fromDDL(_ddl(fields))
+        if (sorted((f.name, f.dataType.simpleString()) for f in df.schema)
+                != sorted((f.name, f.dataType.simpleString()) for f in want)):
+            raise ValueError(
+                f"{self.namespace}.{self.name}: columns "
+                f"{df.schema.simpleString()} do not match the table schema "
+                f"{want.simpleString()}")
+        df = df.select(*[F.col(f"`{f['name']}`") for f in fields])
         location = metadata["location"]
         write_id = uuid.uuid4().hex[:12]
         data_dir = os.path.join(location, "data", write_id)
@@ -758,9 +773,13 @@ class IcebergTable:
         # commit's rows away — the pointer CAS alone cannot catch it
         # because _commit_write re-reads the pointer.  Same
         # expect_snapshot contract as row-level DML; losers raise
-        # CommitFailedError and the caller re-runs compact().
-        base_snapshot = self._load_metadata()[1]["current-snapshot-id"]
-        df = self.read(spark, snapshot_id=base_snapshot)
+        # CommitFailedError and the caller re-runs compact().  The base
+        # snapshot's files are read under the CURRENT schema — the one
+        # _commit_write stamps on the rewritten files — so a rename or
+        # drop since that snapshot is carried into the rewrite.
+        _, md = self._load_metadata()
+        base_snapshot = md["current-snapshot-id"]
+        df = self.read(spark, _metadata=md)
         if zorder_by:
             if sort_by:
                 raise ValueError("sort_by and zorder_by are exclusive")
@@ -843,9 +862,9 @@ class IcebergTable:
         """Iceberg drop: metadata-only — the field id is retired, so the
         column vanishes from reads WITHOUT rewriting files, and a later
         add_column with the same name (new id) never resurrects the old
-        data (the id map drops retired columns per file).  Refuses to
-        drop a column the CURRENT partition spec transforms (real
-        Iceberg's rule — the write path would break)."""
+        data (the per-file projection by id never selects a retired
+        id).  Refuses to drop a column the CURRENT partition spec
+        transforms (real Iceberg's rule — the write path would break)."""
         self._guard_equality_delete_column(name, "drop")
         fields = self.schema_fields()
         if not any(f["name"] == name for f in fields):
@@ -944,9 +963,8 @@ class IcebergTable:
         first-refresh case for a consumer that checkpointed before any
         data existed), valid regardless of intervening operations."""
         _, metadata = self._load_metadata()
-        fields = self.schema_fields()
-        empty = spark.createDataFrame([], ", ".join(
-            f"`{f['name']}` {f['type']}" for f in fields))
+        empty = spark.createDataFrame([], _ddl(
+            _schema_of(metadata, metadata["current-schema-id"])))
         to_id = to_snapshot or metadata["current-snapshot-id"]
         if to_id is None:
             if from_snapshot is not None:
@@ -1314,26 +1332,17 @@ class IcebergTable:
             location = md["location"]
             write_id = uuid.uuid4().hex[:12]
             del_dir = os.path.join(location, "data", write_id)
-            (all_keys.distinct()
+            (_keys_as(all_keys, md, key_cols).distinct()
              .write.mode("errorifexists").parquet(del_dir))
-            import pyarrow.parquet as pq
             # sequence=None: stamped inside _commit_write from the same
             # reloaded metadata the snapshot's sequence derives from —
             # a value computed from THIS load could be one low if a
             # concurrent branch-targeted commit bumped the counter
             # without moving current-snapshot-id (ADVICE r3).
-            eq_files = []
-            for dirpath, _dirs, files in os.walk(del_dir):
-                for fname in sorted(files):
-                    if not fname.endswith(".parquet"):
-                        continue
-                    path = os.path.join(dirpath, fname)
-                    n = pq.ParquetFile(path).metadata.num_rows
-                    if n:
-                        eq_files.append(
-                            {"path": path, "record_count": n,
-                             "equality_cols": list(key_cols),
-                             "sequence": None})
+            eq_files = [{"path": e.file_path,
+                         "record_count": e.record_count,
+                         "equality_cols": list(key_cols), "sequence": None}
+                        for e in _collect_entries(del_dir) if e.record_count]
             kept = self.plan_files(_metadata=md)
             prior = ([] if base_snapshot is None else
                      _snapshot(md, base_snapshot).get("delete-files", []))
@@ -1386,21 +1395,12 @@ class IcebergTable:
         location = md["location"]
         write_id = uuid.uuid4().hex[:12]
         del_dir = os.path.join(location, "data", write_id)
-        keys.select(*key_cols).distinct().write.mode(
+        _keys_as(keys, md, key_cols).distinct().write.mode(
             "errorifexists").parquet(del_dir)
-        import pyarrow.parquet as pq
         seq = md["last-sequence-number"] + 1
-        new_files = []
-        for dirpath, _dirs, files in os.walk(del_dir):
-            for fname in sorted(files):
-                if not fname.endswith(".parquet"):
-                    continue
-                path = os.path.join(dirpath, fname)
-                n = pq.ParquetFile(path).metadata.num_rows
-                if n:
-                    new_files.append({"path": path, "record_count": n,
-                                      "equality_cols": list(key_cols),
-                                      "sequence": seq})
+        new_files = [{"path": e.file_path, "record_count": e.record_count,
+                      "equality_cols": list(key_cols), "sequence": seq}
+                     for e in _collect_entries(del_dir) if e.record_count]
         if not new_files:
             shutil.rmtree(del_dir, ignore_errors=True)
             return {"snapshot_id": None, "delete_files": 0,
@@ -1451,16 +1451,8 @@ class IcebergTable:
         write_id = uuid.uuid4().hex[:12]
         del_dir = os.path.join(location, "data", write_id)
         matches.write.mode("errorifexists").parquet(del_dir)
-        import pyarrow.parquet as pq
-        new_files = []
-        for dirpath, _dirs, files in os.walk(del_dir):
-            for fname in sorted(files):
-                if not fname.endswith(".parquet"):
-                    continue
-                path = os.path.join(dirpath, fname)
-                n = pq.ParquetFile(path).metadata.num_rows
-                if n:
-                    new_files.append({"path": path, "record_count": n})
+        new_files = [{"path": e.file_path, "record_count": e.record_count}
+                     for e in _collect_entries(del_dir) if e.record_count]
         n_deleted = sum(f["record_count"] for f in new_files)
         if not new_files:
             shutil.rmtree(del_dir, ignore_errors=True)
@@ -1559,11 +1551,12 @@ class IcebergTable:
              prune: tuple[str, object, object]
              | list[tuple[str, object, object]] | None = None,
              partition_filter: dict[str, object] | None = None,
+             _metadata: dict | None = None,
              ) -> DataFrame:
         """Snapshot-pinned read: the returned plan scans exactly the files
         the manifest (after pruning) lists — Spark still does its own
         row-group pushdown within each file."""
-        _, metadata = self._load_metadata()
+        metadata = _metadata or self._load_metadata()[1]
         sid = _resolve_sid(metadata, snapshot_id, as_of_timestamp_ms)
         entries = self.plan_files(snapshot_id, as_of_timestamp_ms, prune,
                                   partition_filter, _metadata=metadata)
@@ -1578,11 +1571,9 @@ class IcebergTable:
         schema_id = (_snapshot(metadata, sid)["schema-id"]
                      if pinned and sid is not None
                      else metadata["current-schema-id"])
-        fields = _schema_of(metadata, schema_id)
         if not entries:
-            schema = ", ".join(
-                f"`{f['name']}` {f['type']}" for f in fields)
-            return spark.createDataFrame([], schema)
+            return spark.createDataFrame(
+                [], _ddl(_schema_of(metadata, schema_id)))
         # Merge-on-read deletes are snapshot-scoped: a time-travel read
         # applies exactly the delete files THAT snapshot recorded (none
         # before the delete committed), the same way it pins its schema.
@@ -1608,15 +1599,6 @@ def _local_path(uri: str) -> str:
         from urllib.parse import unquote, urlparse
         return unquote(urlparse(uri).path)
     return uri
-
-
-def _fill_missing(df: DataFrame, fields: list[dict]) -> DataFrame:
-    """Files written before an add_column lack the new field; surface it
-    as a typed NULL (Iceberg read semantics)."""
-    for f in fields:
-        if f["name"] not in df.columns:
-            df = df.withColumn(f["name"], F.lit(None).cast(f["type"]))
-    return df
 
 
 _Z_BITS = 16  # rank resolution per z-dimension
@@ -1718,6 +1700,20 @@ def _schema_of(metadata: dict, schema_id: int) -> list[dict]:
     return schema["fields"]
 
 
+def _ddl(fields: list[dict]) -> str:
+    """Schema fields → the DDL string Spark readers and frames take."""
+    return ", ".join(f"`{f['name']}` {f['type']}" for f in fields)
+
+
+def _keys_as(df: DataFrame, metadata: dict,
+             key_cols: list[str]) -> DataFrame:
+    """Equality-delete key columns cast to the current schema's types,
+    the types the files are read back under."""
+    types = {f["name"]: f["type"]
+             for f in _schema_of(metadata, metadata["current-schema-id"])}
+    return df.select(*[F.col(c).cast(types[c]).alias(c) for c in key_cols])
+
+
 def _read_entries_df(spark: SparkSession, metadata: dict,
                      entries: list[DataFileEntry],
                      include_file: bool = False,
@@ -1729,9 +1725,11 @@ def _read_entries_df(spark: SparkSession, metadata: dict,
     mapping each file's columns by FIELD ID from the schema it was
     written with — the Iceberg rule that makes rename/drop evolution
     safe: a renamed column's data follows its id; a dropped-then-readded
-    name never resurrects old data (different id).  Files group by their
-    write schema; each group renames/drops by the id map, fills added
-    columns with typed NULLs, then the groups union by name.
+    name never resurrects old data (different id).  No schema is ever
+    inferred from the files: each file group is read under its write
+    schema from metadata, and ONE projection maps it to the target —
+    a field the write schema has is selected by its written name, any
+    other field is a typed NULL — then the groups union by name.
 
     ``delete_files`` applies MERGE-ON-READ positional deletes: each is a
     ``{"path": ...}`` entry whose parquet rows are (file_uri, pos) pairs
@@ -1745,7 +1743,6 @@ def _read_entries_df(spark: SparkSession, metadata: dict,
     cur_fields = _schema_of(
         metadata, (metadata["current-schema-id"]
                    if to_schema_id is None else to_schema_id))
-    names = [f["name"] for f in cur_fields]
     pos_dels = [d for d in (delete_files or [])
                 if "equality_cols" not in d]
     eq_dels = [d for d in (delete_files or []) if "equality_cols" in d]
@@ -1760,41 +1757,28 @@ def _read_entries_df(spark: SparkSession, metadata: dict,
         groups.setdefault((e.schema_id, seq_key), []).append(e)
     parts = []
     for (sid, fseq), es in sorted(groups.items()):
-        df = (spark.read.option("mergeSchema", "true")
-              .parquet(*[e.file_path for e in es]))
+        write_fields = _schema_of(metadata, sid)
+        written = {f["id"]: f["name"] for f in write_fields}
+        proj = [F.col(f"`{written[f['id']]}`").alias(f["name"])
+                if f["id"] in written
+                else F.lit(None).cast(f["type"]).alias(f["name"])
+                for f in cur_fields]
         if include_file:
-            df = df.withColumn("__file", F.input_file_name())
+            proj.append(F.input_file_name().alias("__file"))
         if need_pos:
             # _metadata must be projected at the scan, before any union
-            df = df.withColumns({
-                "__dfile": F.col("_metadata.file_path"),
-                "__dpos": F.col("_metadata.row_index")})
+            proj += [F.col("_metadata.file_path").alias("__dfile"),
+                     F.col("_metadata.row_index").alias("__dpos")]
         if eq_dels:
-            df = df.withColumn("__fseq", F.lit(fseq))
-        cur_by_id = {f["id"]: f["name"] for f in cur_fields}
-        for f in _schema_of(metadata, sid):
-            if f["id"] not in cur_by_id and f["name"] in df.columns:
-                df = df.drop(f["name"])       # dropped field: id retired
-        renames = {f["name"]: cur_by_id[f["id"]]
-                   for f in _schema_of(metadata, sid)
-                   if f["id"] in cur_by_id
-                   and f["name"] != cur_by_id[f["id"]]}
-        # two-phase so swaps (a<->b) can't collide mid-rename
-        for old in renames:
-            df = df.withColumnRenamed(old, f"__evo__{old}")
-        for old, new in renames.items():
-            df = df.withColumnRenamed(f"__evo__{old}", new)
-        df = _fill_missing(df, cur_fields)
-        parts.append(df.select(
-            *names,
-            *(["__file"] if include_file else []),
-            *(["__dfile", "__dpos"] if need_pos else []),
-            *(["__fseq"] if eq_dels else [])))
+            proj.append(F.lit(fseq).alias("__fseq"))
+        parts.append(spark.read.schema(_ddl(write_fields))
+                     .parquet(*[e.file_path for e in es]).select(*proj))
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
     if pos_dels:
-        dels = spark.read.parquet(*[d["path"] for d in pos_dels])
+        dels = (spark.read.schema("file_uri STRING, pos BIGINT")
+                .parquet(*[d["path"] for d in pos_dels]))
         out = out.join(
             dels,
             (out["__dfile"] == dels["file_uri"])
@@ -1803,15 +1787,20 @@ def _read_entries_df(spark: SparkSession, metadata: dict,
     # Equality deletes: anti-join on the named key columns, guarded by
     # the strict sequence rule (delete seq > row's file seq) — grouped
     # by key-column set so files naming different keys never union.
+    # Key files are read under the key columns' target types (rename
+    # and drop of a bound key column are refused while the file lives).
+    by_name = {f["name"]: f for f in cur_fields}
     by_cols: dict[tuple[str, ...], list[dict]] = {}
     for d in eq_dels:
         by_cols.setdefault(tuple(d["equality_cols"]), []).append(d)
     for cols, ds in sorted(by_cols.items()):
+        key_ddl = _ddl([by_name[c] for c in cols])
         dels = None
         for d in ds:
-            one = (spark.read.parquet(d["path"])
-                   .select(*[F.col(c).alias(f"__eq_{c}") for c in cols])
-                   .withColumn("__dseq", F.lit(d["sequence"])))
+            one = (spark.read.schema(key_ddl).parquet(d["path"])
+                   .select(*[F.col(f"`{c}`").alias(f"__eq_{c}")
+                             for c in cols],
+                           F.lit(d["sequence"]).alias("__dseq")))
             dels = one if dels is None else dels.unionByName(one)
         cond = F.col("__fseq") < F.col("__dseq")
         for c in cols:

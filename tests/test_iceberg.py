@@ -837,6 +837,9 @@ def test_rename_column_data_follows_field_id(catalog, spark):
     assert [f["name"] for f in t.schema_fields()] == ["k", "val"]
     got = {r["k"]: r["val"] for r in t.read(spark).collect()}
     assert got == {1: 10, 2: 20}          # old files' data follows the id
+    t.compact(spark)                      # rewrite under the new name
+    got = {r["k"]: r["val"] for r in t.read(spark).collect()}
+    assert got == {1: 10, 2: 20}
     # writes + DML under the new name work across both file generations
     t.append(spark.createDataFrame([(3, 30)], "k long, val long"))
     t.merge_upsert(spark, spark.createDataFrame(
@@ -855,6 +858,8 @@ def test_drop_and_readd_never_resurrects(catalog, spark):
     t.append(df)
     t.drop_column("v")
     assert t.read(spark).columns == ["k"]
+    t.compact(spark)                      # rewrite without the dropped id
+    assert sorted(r["k"] for r in t.read(spark).collect()) == [1, 2]
     t.add_column("v", "bigint")           # same NAME, new field id
     got = {r["k"]: r["v"] for r in t.read(spark).collect()}
     assert got == {1: None, 2: None}      # old 111/222 never resurrect
@@ -1538,3 +1543,67 @@ def test_rollback_restores_state_and_log_resolution(spark, tmp_path):
     import pytest as _pytest
     with _pytest.raises(Exception):
         t.rollback_to(999999)
+
+
+def test_commit_refuses_frame_that_differs_from_schema(catalog, spark):
+    """Reads trust the schema in metadata, so a write whose (name, type)
+    columns differ from the current schema is refused before any file
+    is written: no snapshot, rows and readability unchanged.  The same
+    columns in another order are written in schema order, and
+    equality-delete keys of another type are cast to the key's type."""
+    df = spark.createDataFrame([(1, "a")], "k int, v string")
+    t = catalog.create_table("ns", "typed", df)
+    s1 = t.append(df)
+    data_dir = os.path.join(catalog.warehouse, "ns", "typed", "data")
+    n_dirs = len(os.listdir(data_dir))
+    for bad in ("k bigint, v string", "k int", "k int, v string, x int"):
+        row = {"k bigint, v string": (2, "b"), "k int": (2,)}.get(
+            bad, (2, "b", 2))
+        with pytest.raises(ValueError, match="do not match the table"):
+            t.append(spark.createDataFrame([row], bad))
+    assert len(os.listdir(data_dir)) == n_dirs
+    assert [s["snapshot-id"] for s in t.snapshots()] == [s1]
+    assert [tuple(r) for r in t.read(spark).collect()] == [(1, "a")]
+    t.append(spark.createDataFrame([("c", 3)], "v string, k int"))
+    assert t.read(spark).columns == ["k", "v"]
+    assert sorted(map(tuple, t.read(spark).collect())) == [
+        (1, "a"), (3, "c")]
+    t.delete_keys_mor_equality(
+        spark, spark.createDataFrame([(3,)], "k bigint"), ["k"])
+    assert [tuple(r) for r in t.read(spark).collect()] == [(1, "a")]
+
+
+def test_snapshot_read_plan_runs_no_spark_job(catalog, spark):
+    """Building a snapshot read runs no Spark job: every file is read
+    under its write schema from metadata, never by inferring one from
+    footers — across appends, a rename, an added column and both
+    merge-on-read delete kinds.  (Under 32 files: Spark lists more
+    paths than that in a job of its own.)"""
+    def frame(rows, ddl):
+        return spark.createDataFrame(rows, ddl).coalesce(1)
+    t = catalog.create_table("ns", "nojob", frame([], "id long, k long"))
+    t.append(frame([(i, i % 5) for i in range(10)], "id long, k long"))
+    t.append(frame([(i, i % 5) for i in range(10, 20)], "id long, k long"))
+    t.rename_column("k", "key")
+    t.add_column("tag", "string")
+    t.append(frame([(20, 2, "x"), (21, 1, "y")],
+                   "id long, key long, tag string"))
+    t.delete_where_mor(spark, F.col("id") == 3)                # positional
+    t.delete_keys_mor_equality(                                # equality
+        spark, frame([(4,)], "key long"), ["key"])
+    assert len(t.plan_files()) < 32
+    sc = spark.sparkContext
+    prior = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setLocalProperty("spark.jobGroup.id", "iceberg-read-plan")
+    try:
+        df = t.read(spark)
+        tracker = sc.statusTracker()
+        assert tracker.getJobIdsForGroup("iceberg-read-plan") == []
+        rows = sorted(map(tuple, df.collect()))
+        assert tracker.getJobIdsForGroup("iceberg-read-plan")  # control
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", prior)
+    assert df.columns == ["id", "key", "tag"]
+    expected = [(i, i % 5, None) for i in range(20)
+                if i != 3 and i % 5 != 4] + [(20, 2, "x"), (21, 1, "y")]
+    assert rows == sorted(expected)
