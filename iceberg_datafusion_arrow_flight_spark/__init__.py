@@ -14,7 +14,7 @@ Apache Spark:
   spells differently (``DISTINCT ON``, ``::`` casts, function-name aliases,
   NULLS ordering defaults) are rewritten by :mod:`.dialect`.
 - **Service layer**: the reference's session / prepared-statement /
-  result-cache semantics (lib.rs:80-82, 198-259, 601-730) are reproduced
+  ticket semantics (lib.rs:80-82, 198-259, 601-730) are reproduced
   in :mod:`.service`, with an optional Arrow Flight front door.
 - **Sources**: Parquet-backed tables registered per-session (Iceberg
   catalog wiring is config-gated — the runtime jar is not present in the

@@ -1,8 +1,8 @@
 """Registry entries that exercise the Flight SQL serving path end-to-end.
 
 The reference's ONLY serving path is the Flight SQL wire protocol
-(iceberg-datafusion-arrow-flight/src/lib.rs:319-380 executes; 261-296
-serves DoGet from the result cache), yet until this entry no registry
+(iceberg-datafusion-arrow-flight/src/lib.rs:319-380 plans; 261-296
+serves DoGet, which here runs the plan), yet until this entry no registry
 query flowed through it — the wire codec was pinned only by golden-byte
 pytest.  ``service_flight_roundtrip`` closes that gap (VERDICT r3 ask
 #6): it boots the real gRPC server on an ephemeral port, then drives the
@@ -10,12 +10,12 @@ stock client conversation — Basic-auth handshake → bearer token →
 CreatePreparedStatement → DoPut parameter bind ($1) → GetFlightInfo →
 DoGet — and returns the FETCHED ARROW BATCHES as the query result.  If
 any layer (dialect rewrite, param binding, Arrow serialization, ticket
-routing, result cache) corrupts data, the driver's value hash fails.
+routing, DoGet execution) corrupts data, the oracle's value hash fails.
 
 Scale note: the protocol layer adds one Arrow IPC round-trip on the
 RESULT (4 groups for Q1) — the heavy work stays in the cluster-side
-plan, identical to ``tpch_q1_pricing_summary``; the reference caches the
-full result the same way (lib.rs:288-295).
+plan, identical to ``tpch_q1_pricing_summary``; the reference streams
+the full result the same way (lib.rs:288-295).
 """
 
 from __future__ import annotations

@@ -1,4 +1,4 @@
-"""Session / prepared-statement / result-cache service layer.
+"""Session / prepared-statement / ticket service layer.
 
 This is the part of the reference implemented in its OWN code (not in a
 pinned dependency): the Flight SQL service state machine around a
@@ -6,7 +6,7 @@ per-connection engine context —
 
 - ``contexts: DashMap<token, SessionContext>``   (lib.rs:80)
 - ``statements: DashMap<handle, LogicalPlan>``   (lib.rs:81)
-- ``results: DashMap<handle, Vec<RecordBatch>>`` (lib.rs:82)
+- ``results: DashMap<handle, Vec<RecordBatch>>`` (lib.rs:82; here a plan)
 
 :mod:`.engine` reproduces that state machine over Spark sessions
 (protocol-agnostic, directly testable); :mod:`.flight_server` is the

@@ -1,5 +1,5 @@
 """Protocol-agnostic engine service: sessions, prepared statements,
-result cache — the reference's own state machine re-expressed over Spark.
+tickets — the reference's own state machine re-expressed over Spark.
 
 Reference parity map (iceberg-datafusion-arrow-flight/src/lib.rs):
 
@@ -15,27 +15,27 @@ Reference parity map (iceberg-datafusion-arrow-flight/src/lib.rs):
   planner; it becomes a constant single-row result
   ``rollback='ROLLBACK'`` (lib.rs:677, 683-696 — transactions don't
   exist; JDBC clients issuing ROLLBACK get a fake success).  SHOW ALL /
-  TABLES / COLUMNS, DESCRIBE and EXPLAIN [ANALYZE] are likewise answered
-  as constant Arrow tables, built here.  Any other statement without
-  ``$n`` parameters is parsed and analyzed once, here, like the
-  reference's ``ctx.sql`` (lib.rs:699-700; Catalyst analysis ≡ DF
-  ``into_optimized_plan``), and its DataFrame kept: a DDL/DML statement
-  without parameters therefore runs exactly once, at prepare.  With
-  parameters, planning waits for execute.
+  TABLES / COLUMNS, DESCRIBE, EXPLAIN [ANALYZE] and SET datafusion.* are
+  likewise answered as constant Arrow tables, built here.  Any other
+  statement without ``$n`` parameters is parsed and analyzed once, here,
+  like the reference's ``ctx.sql`` (lib.rs:699-700; Catalyst analysis ≡
+  DF ``into_optimized_plan``), and its DataFrame kept: a DDL/DML
+  statement without parameters therefore runs exactly once, at prepare.
+  With parameters, planning waits for execute.
 - bind: positional ``$n`` values (lib.rs:601-643, ``with_param_values``
   lib.rs:630-633) → Spark named-parameter binding via the dialect pass.
-- execute: optimize and plan the kept analyzed statement afresh — or,
-  with parameters, the statement with its bound values — and
-  materialize the FULL result server-side keyed by handle
-  (lib.rs:332-344) — here as a pyarrow Table (Arrow end-to-end
-  like the reference); a constant result is cached as is.  Unlike the
-  reference's unbounded cache (lib.rs:82 — OOM by design at scale), the
-  cache is LRU-bounded and evicts oldest results; SURVEY §7.1 step 7
-  calls out exactly this fix.
+- execute (GetFlightInfo): plan the kept analyzed statement afresh — or,
+  with parameters, the statement with its bound values — and keep the
+  plan, not its result, under the handle, which is the ticket.  The
+  reference runs the statement here and holds its batches until DoGet
+  (lib.rs:82, 332-344).
+- fetch (DoGet): run that plan, or return a constant result as is.  Each
+  fetch runs the plan and each execute plans again: execution errors
+  arrive at fetch, analysis errors at prepare or execute.
 - execute_update: DDL/DML path; returns -1 like the reference
   (lib.rs:645-654).  A statement with parameters runs here, at each
   call; one without already ran at prepare.
-- close: evict statement + result (lib.rs:718-730).
+- close: drop the statement and its ticket (lib.rs:718-730).
 
 Everything DataFusion-dialect entering this layer passes through
 :func:`..dialect.rewrite_sql`, and each session inherits the SQL-UDF
@@ -48,7 +48,6 @@ import os
 import re
 import threading
 import uuid
-from collections import OrderedDict
 from dataclasses import dataclass, field
 
 import pyarrow as pa
@@ -120,7 +119,6 @@ class PreparedStatement:
     ``$n`` parameters, whose ``translated_sql`` is planned at each
     execute with the bound ``args``."""
     token: str
-    raw_sql: str
     translated_sql: str
     args: dict | None = None
     result: pa.Table | None = None
@@ -132,7 +130,6 @@ class EngineService:
     """One instance fronts one root SparkSession (≈ the server process)."""
 
     root: SparkSession
-    max_cached_results: int = 64
     # init run once per service, on the template every handshake clones
     # — the analogue of the reference injecting its catalog list into
     # every new SessionContext (lib.rs:94-103).  On an Iceberg deployment
@@ -151,11 +148,11 @@ class EngineService:
     catalog: object | None = None
     sessions: dict[str, SparkSession] = field(default_factory=dict)
     statements: dict[str, PreparedStatement] = field(default_factory=dict)
-    results: OrderedDict = field(default_factory=OrderedDict)
+    # ticket → the constant result, or the DataFrame its fetch runs
+    results: dict[str, pa.Table | DataFrame] = field(default_factory=dict)
     # gRPC threads share every map here: each insert, pop and scan holds
-    # this lock (unlocked, a scan racing an insert raises and concurrent
-    # move_to_end/popitem corrupt the OrderedDict).  Spark work stays
-    # OUTSIDE it, so long queries never serialize sessions.
+    # this lock (unlocked, a scan racing an insert raises).  Spark work
+    # stays OUTSIDE it, so long queries never serialize sessions.
     _lock: threading.Lock = field(default_factory=threading.Lock,
                                   repr=False)
     # qualified-name → view mapping per token
@@ -274,6 +271,14 @@ class EngineService:
         (column_name, data_type, is_nullable), here from Catalyst."""
         if sql == ROLLBACK_LITERAL:
             return _strings("rollback", [("ROLLBACK",)])
+        m = _SET_RE.match(sql)
+        if m and (key := m.group(1).lower()).startswith("datafusion."):
+            # the mapped Spark key first, so a refused value sets
+            # nothing; each key also lands as-is, for df_settings
+            if key in DATAFUSION_CONF_MAP:
+                session.conf.set(DATAFUSION_CONF_MAP[key], m.group(2))
+            session.conf.set(key, m.group(2))
+            return pa.table({})
         if _SHOW_ALL_RE.match(sql):
             return _strings("name value", self._df_settings_rows(session))
         db, schema = _env_identity()
@@ -317,7 +322,7 @@ class EngineService:
         handle = str(uuid.uuid4())
         result = self._engine_result(token, session, sql)
         if result is not None:
-            st = PreparedStatement(token, sql, sql, result=result)
+            st = PreparedStatement(token, sql, result=result)
         else:
             if _DF_SETTINGS_RE.search(sql):
                 # the client's own SQL runs over the settings, so this
@@ -327,7 +332,7 @@ class EngineService:
                                         ).createOrReplaceTempView("df_settings")
                 sql = _DF_SETTINGS_RE.sub("df_settings", sql)
             translated = rewrite_sql(self._service_passes(sql, token))
-            st = PreparedStatement(token, sql, translated)
+            st = PreparedStatement(token, translated)
             # parameters are counted OUTSIDE string literals — a literal
             # like 'costs $5' must not defer analysis (ADVICE r1)
             if not find_params(sql):
@@ -337,15 +342,17 @@ class EngineService:
         return handle
 
     def statement_schema(self, handle: str) -> pa.Schema | None:
-        """The result's Arrow schema, known at prepare like the schema the
-        reference ships (lib.rs:702-708); None while analysis waits for
-        bound parameters."""
+        """The Arrow schema fetch returns: the last execute's plan's, else
+        the one known at prepare (lib.rs:702-708); None while analysis
+        waits for bound parameters."""
         st = self.statements[handle]
-        if st.result is not None:
-            return st.result.schema
-        if st.df is not None:
-            return to_arrow_schema(st.df.schema)
-        return None
+        with self._lock:
+            source = self.results.get(
+                handle, st.df if st.result is None else st.result)
+        if isinstance(source, DataFrame):  # the schema toArrow casts to
+            return to_arrow_schema(source.schema, prefers_large_types=(
+                source.sparkSession._jconf.arrowUseLargeVarTypes()))
+        return None if source is None else source.schema
 
     def _owned(self, token: str, handle: str) -> PreparedStatement:
         """Resolve a handle AND verify it belongs to the caller's session
@@ -377,19 +384,15 @@ class EngineService:
         return session.sql(st.translated_sql, args=st.args)
 
     def execute(self, token: str, handle: str) -> str:
-        """Run the statement, cache the FULL result (Arrow), return the
-        fetch ticket (the handle itself, like FetchResults{handle} at
-        lib.rs:351-361)."""
+        """Plan the statement without running it and return the fetch
+        ticket (the handle itself, like FetchResults{handle} at
+        lib.rs:351-361); the plan replaces the ticket's previous one."""
         st = self._owned(token, handle)
-        session = self._session(token)
-        table = st.result
-        if table is None:
-            table = self._dataframe(st, session).toArrow()
+        source = st.result
+        if source is None:
+            source = self._dataframe(st, self._session(token))
         with self._lock:
-            self.results[handle] = table
-            self.results.move_to_end(handle)
-            while len(self.results) > self.max_cached_results:
-                self.results.popitem(last=False)
+            self.results[handle] = source
         return handle
 
     def execute_update(self, token: str, handle: str) -> int:
@@ -397,33 +400,21 @@ class EngineService:
         do_put_prepared_statement_update (lib.rs:645-654).  A statement
         without parameters already ran at prepare (collecting a command's
         DataFrame reads its stored output, it does not run it again); one
-        with parameters runs here.
-
-        ``SET datafusion.x = v`` maps through DATAFUSION_CONF_MAP onto
-        the session conf; unmapped keys are accepted and ignored (compat)
-        — each key also lands as-is in the conf, for ``df_settings``."""
+        with parameters runs here."""
         st = self._owned(token, handle)
-        session = self._session(token)
-        m = _SET_RE.match(st.raw_sql)
-        if m and (key := m.group(1).lower()).startswith("datafusion."):
-            if key in DATAFUSION_CONF_MAP:
-                session.conf.set(DATAFUSION_CONF_MAP[key], m.group(2))
-            session.conf.set(key, m.group(2))
-        elif st.result is None:
-            self._dataframe(st, session).collect()
+        if st.result is None:
+            self._dataframe(st, self._session(token)).collect()
         return -1
 
     # ------------------------------------------------------------ fetch
     def fetch(self, token: str, handle: str) -> pa.Table:
-        """Cached-result fetch, keyed by the owner's session: a ticket
+        """Run the plan the ticket's last execute made (a constant result
+        is returned as is), keyed by the owner's session: a ticket
         obtained by one session is not redeemable by another."""
-        if handle in self.statements:
-            self._owned(token, handle)
-        try:
-            with self._lock:
-                return self.results[handle]
-        except KeyError:
-            raise KeyError(f"no cached result for handle {handle}") from None
+        self._owned(token, handle)
+        with self._lock:
+            source = self.results[handle]
+        return source if isinstance(source, pa.Table) else source.toArrow()
 
     # ------------------------------------------------------------ close
     def close_prepared_statement(self, token: str, handle: str) -> None:

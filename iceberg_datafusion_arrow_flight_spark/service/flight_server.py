@@ -14,11 +14,11 @@ SURVEY §2.12):
   (lib.rs:601-643); ``CommandPreparedStatementUpdate`` /
   ``CommandStatementUpdate`` → DDL/DML, ``DoPutUpdateResult{-1}``
   (lib.rs:645-654)
-- GetFlightInfo with ``CommandPreparedStatementQuery`` → EXECUTES and
-  caches, endpoint ticket = Any-wrapped ``FetchResults{handle}`` (the
+- GetFlightInfo with ``CommandPreparedStatementQuery`` → plans, returns
+  the schema; endpoint ticket = Any-wrapped ``FetchResults{handle}`` (the
   reference's own fetch message, custom type_url lib.rs:793-810), no
   location = single node (lib.rs:346-361)
-- DoGet with that ticket → streams the cached Arrow table (lib.rs:261-296)
+- DoGet with that ticket → runs the plan, streams Arrow (lib.rs:261-296)
 - every method the reference leaves unimplemented raises the same
   "Implement …" unimplemented error (get_flight_info_statement,
   catalogs/schemas/tables/sql_info, transactions — lib.rs:298-316,
@@ -63,6 +63,18 @@ class BasicAuthHandler(flight.ServerAuthHandler):
         return token
 
 
+def _flight_status(verb):
+    """``verb`` raising AuthError as unauthorized, KeyError as server error."""
+    def mapped(*args):
+        try:
+            return verb(*args)
+        except AuthError as exc:
+            raise flight.FlightUnauthorizedError(str(exc)) from exc
+        except KeyError as exc:
+            raise flight.FlightServerError(str(exc)) from exc
+    return mapped
+
+
 class SparkFlightServer(flight.FlightServerBase):
     def __init__(self, service: EngineService,
                  location: str = "grpc://0.0.0.0:31337",
@@ -93,14 +105,8 @@ class SparkFlightServer(flight.FlightServerBase):
     def _token(context) -> str:
         return context.peer_identity().decode()
 
-    # --------------------------------------------------------- helpers
-    def _schema_ipc(self, handle: str) -> bytes:
-        """Dataset schema as Arrow IPC bytes (SchemaAsIpc, lib.rs:704-708);
-        empty when analysis is deferred (parameterized statement)."""
-        schema = self.service.statement_schema(handle)
-        return b"" if schema is None else schema.serialize().to_pybytes()
-
     # --------------------------------------------------------- actions
+    @_flight_status
     def do_action(self, context, action):
         token = self._token(context)
         raw = action.body.to_pybytes() if action.body else b""
@@ -113,12 +119,15 @@ class SparkFlightServer(flight.FlightServerBase):
                     f"CreatePreparedStatement: unexpected payload {name!r}")
             handle = self.service.create_prepared_statement(
                 token, fields["query"])
-            result = pack_any(
+            # the schema as Arrow IPC bytes (SchemaAsIpc, lib.rs:704-708);
+            # empty while analysis waits for bound parameters
+            schema = self.service.statement_schema(handle)
+            return [pack_any(
                 "ActionCreatePreparedStatementResult",
                 prepared_statement_handle=handle.encode(),
-                dataset_schema=self._schema_ipc(handle),
-                parameter_schema=b"")
-            return [result]
+                dataset_schema=b"" if schema is None
+                else schema.serialize().to_pybytes(),
+                parameter_schema=b"")]
         if action.type == "ClosePreparedStatement":
             name, fields = unpack_any(raw)
             if name != "ActionClosePreparedStatementRequest":
@@ -155,6 +164,7 @@ class SparkFlightServer(flight.FlightServerBase):
             return [col.to_pylist()[0] for col in batch_table.columns]
         return [v for v in batch_table.column(0).to_pylist()]
 
+    @_flight_status
     def do_put(self, context, descriptor, reader, writer):
         token = self._token(context)
         name, fields = unpack_any(descriptor.command)
@@ -177,8 +187,10 @@ class SparkFlightServer(flight.FlightServerBase):
         if name == "CommandStatementUpdate":
             handle = self.service.create_prepared_statement(
                 token, fields["query"])
-            n = self.service.execute_update(token, handle)
-            self.service.close_prepared_statement(token, handle)
+            try:
+                n = self.service.execute_update(token, handle)
+            finally:
+                self.service.close_prepared_statement(token, handle)
             writer.write(pa.py_buffer(pack_any(
                 "DoPutUpdateResult", record_count=n)))
             return
@@ -189,6 +201,7 @@ class SparkFlightServer(flight.FlightServerBase):
             f"Implement do_put for {name or 'an unknown command'}")
 
     # --------------------------------------------------------- execute
+    @_flight_status
     def get_flight_info(self, context, descriptor):
         token = self._token(context)
         name, fields = unpack_any(descriptor.command)
@@ -211,16 +224,17 @@ class SparkFlightServer(flight.FlightServerBase):
             raise flight.FlightServerError(
                 f"Implement get_flight_info for {name or 'an unknown command'}")
         ticket_handle = self.service.execute(token, handle)
-        table = self.service.fetch(token, ticket_handle)
         # ticket = Any-wrapped FetchResults{handle}, byte-compatible with
         # the reference's fetch ticket (lib.rs:351-355)
         ticket = flight.Ticket(pack_any("FetchResults", handle=ticket_handle))
         endpoint = flight.FlightEndpoint(ticket, [])
         # total_records/bytes -1: the reference never computes them
         # (lib.rs:368-370)
-        return flight.FlightInfo(table.schema, descriptor, [endpoint], -1, -1)
+        return flight.FlightInfo(self.service.statement_schema(ticket_handle),
+                                 descriptor, [endpoint], -1, -1)
 
     # --------------------------------------------------------- fetch
+    @_flight_status
     def do_get(self, context, ticket):
         raw = ticket.ticket
         name, fields = unpack_any(raw)
@@ -232,13 +246,8 @@ class SparkFlightServer(flight.FlightServerBase):
             # lib.rs:266-271: any other payload is rejected
             raise flight.FlightServerError(
                 f"do_get: The defined request is invalid: {PbAny.decode(raw).type_url}")
-        try:
-            table = self.service.fetch(self._token(context), handle)
-        except AuthError as exc:
-            raise flight.FlightUnauthorizedError(str(exc)) from exc
-        except KeyError as exc:
-            raise flight.FlightServerError(str(exc)) from exc
-        return flight.RecordBatchStream(table)
+        return flight.RecordBatchStream(
+            self.service.fetch(self._token(context), handle))
 
     # ------------------------------------------------- not implemented
     def list_flights(self, context, criteria):

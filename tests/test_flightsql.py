@@ -100,7 +100,7 @@ def sql_server(spark, monkeypatch):
     from iceberg_datafusion_arrow_flight_spark.service import EngineService
     from iceberg_datafusion_arrow_flight_spark.service.flight_server import (
         serve_background)
-    service = EngineService(root=spark, max_cached_results=8)
+    service = EngineService(root=spark)
     # Ephemeral port (bind 0, read back the real one): a fixed port
     # made this suite flaky under any concurrent run of itself (the
     # one failure class ever seen here) — same pattern as the
@@ -191,7 +191,7 @@ def test_flight_sql_over_tls(spark, monkeypatch):
         SparkFlightServer)
     from iceberg_datafusion_arrow_flight_spark.service.flightsql_client import (
         FlightSqlClient)
-    service = EngineService(root=spark, max_cached_results=8)
+    service = EngineService(root=spark)
     server = SparkFlightServer(service, "grpc://localhost:0")
     assert server.tls_certificate is not None
     threading.Thread(target=server.serve, daemon=True).start()

@@ -131,7 +131,7 @@ def raw_server(spark, monkeypatch):
     from iceberg_datafusion_arrow_flight_spark.service import EngineService
     from iceberg_datafusion_arrow_flight_spark.service.flight_server import (
         serve_background)
-    service = EngineService(root=spark, max_cached_results=8)
+    service = EngineService(root=spark)
     server, _ = serve_background(service, port=0)
     client = flight.FlightClient(f"grpc://localhost:{server.port}")
     client.authenticate(_Auth())

@@ -129,14 +129,14 @@ def test_flight_service_reads_catalog_tables(spark, backing, served,
     tok1 = svc.handshake("admin", "secret")
     h = svc.create_prepared_statement(
         tok1, "SELECT COUNT(*) AS n, 'sales.items' AS lit FROM sales.items")
-    res = svc.results[svc.execute(tok1, h)]
+    res = svc.fetch(tok1, svc.execute(tok1, h))
     row = res.to_pylist()[0]
     assert row["n"] == 8
     assert row["lit"] == "sales.items"  # literal NOT rewritten
     # SHOW COLUMNS resolves the qualified name like DESCRIBE does
     described, shown = (
-        svc.results[svc.execute(tok1, svc.create_prepared_statement(
-            tok1, sql))].select(["column_name", "data_type", "is_nullable"])
+        svc.fetch(tok1, svc.execute(tok1, svc.create_prepared_statement(
+            tok1, sql))).select(["column_name", "data_type", "is_nullable"])
         for sql in ("DESCRIBE sales.items", "SHOW COLUMNS FROM sales.items"))
     assert described.column("column_name").to_pylist() == ["id", "v"]
     assert shown.equals(described)
@@ -146,12 +146,12 @@ def test_flight_service_reads_catalog_tables(spark, backing, served,
         spark.range(2).selectExpr("id + 50 AS id", "id AS v"))
     h1b = svc.create_prepared_statement(
         tok1, "SELECT COUNT(*) AS n FROM sales.items")
-    assert svc.results[svc.execute(tok1, h1b)].to_pylist()[0]["n"] == 8
+    assert svc.fetch(tok1, svc.execute(tok1, h1b)).to_pylist()[0]["n"] == 8
     # …a fresh session sees the new snapshot
     tok2 = svc.handshake("admin", "secret")
     h2 = svc.create_prepared_statement(
         tok2, "SELECT COUNT(*) AS n FROM sales.items")
-    assert svc.results[svc.execute(tok2, h2)].to_pylist()[0]["n"] == 10
+    assert svc.fetch(tok2, svc.execute(tok2, h2)).to_pylist()[0]["n"] == 10
 
 
 def test_engine_catalog_env_precedence(backing, monkeypatch, tmp_path):
@@ -219,10 +219,10 @@ def test_explain_results_survive_interleaved_prepares(spark, backing,
     tok = svc.handshake("u", "p")
     ha = svc.create_prepared_statement(tok, "EXPLAIN SELECT 1 AS a_marker")
     hb = svc.create_prepared_statement(tok, "EXPLAIN SELECT 2 AS b_marker")
-    rows_a = svc.results[svc.execute(tok, ha)].to_pylist()
+    rows_a = svc.fetch(tok, svc.execute(tok, ha)).to_pylist()
     assert any("a_marker" in r["plan"] for r in rows_a)
     assert not any("b_marker" in r["plan"] for r in rows_a)
-    rows_b = svc.results[svc.execute(tok, hb)].to_pylist()
+    rows_b = svc.fetch(tok, svc.execute(tok, hb)).to_pylist()
     assert any("b_marker" in r["plan"] for r in rows_b)
 
 

@@ -1,6 +1,6 @@
 """Service-layer tests: the reference's session / prepared-statement /
-result-cache state machine (lib.rs:80-82, 198-259, 601-730) over Spark,
-plus the Arrow Flight front door end-to-end on localhost.
+ticket state machine (lib.rs:80-82, 198-259, 601-730) over Spark, plus
+the Arrow Flight front door end-to-end on localhost.
 """
 
 from __future__ import annotations
@@ -21,7 +21,7 @@ def creds(monkeypatch):
 @pytest.fixture()
 def service(spark, sf_dir, creds):
     register_tables(spark, sf_dir)
-    return EngineService(spark, max_cached_results=4)
+    return EngineService(spark)
 
 
 def test_handshake_good_and_bad(service):
@@ -200,19 +200,6 @@ def test_close_session_scan_holds_lock_against_prepare(service):
     assert [st.token for st in service.statements.values()] == [other]
 
 
-def test_result_cache_lru_bound(service):
-    token = service.handshake("admin", "secret")
-    handles = []
-    for i in range(6):
-        h = service.create_prepared_statement(token, f"SELECT {i} AS x")
-        service.execute(token, h)
-        handles.append(h)
-    assert len(service.results) == 4  # max_cached_results
-    with pytest.raises(KeyError):
-        service.fetch(token, handles[0])  # evicted
-    assert service.fetch(token, handles[-1]).column("x").to_pylist() == [5]
-
-
 def test_current_database_env_override(service, monkeypatch):
     """lib.rs:106-128: env-driven current_database/current_schema with
     defaults 'datafusion'/'public'."""
@@ -268,6 +255,59 @@ def test_ddl_and_dml_without_parameters_run_once(service, spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS once_t2")
 
 
+def test_execute_plans_and_fetch_runs(service, spark):
+    """GetFlightInfo (execute) plans the statement and runs no Spark job,
+    with or without parameters; DoGet (fetch) runs it.  The server keeps
+    a plan per ticket, never an Arrow table of a SQL statement."""
+    token = service.handshake("admin", "secret")
+    h = service.create_prepared_statement(
+        token, "SELECT CAST(SUM(id) AS BIGINT) AS n FROM range(10)")
+    hp = service.create_prepared_statement(
+        token, "SELECT CAST(SUM(id) AS BIGINT) + $1 AS n FROM range(10)")
+    service.bind_parameters(token, hp, [1])
+    sc = spark.sparkContext
+    prior = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setLocalProperty("spark.jobGroup.id", "engine-execute")
+    try:
+        tracker = sc.statusTracker()
+        for handle in (h, hp):
+            service.execute(token, handle)
+        assert tracker.getJobIdsForGroup("engine-execute") == []
+        assert not any(isinstance(source, pa.Table)
+                       for source in service.results.values())
+        assert service.fetch(token, h).column("n").to_pylist() == [45]
+        assert service.fetch(token, hp).column("n").to_pylist() == [46]
+        assert tracker.getJobIdsForGroup("engine-execute")  # control
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", prior)
+
+
+def test_refused_set_value_is_not_listed(service):
+    """A ``SET datafusion.*`` value the mapped Spark key refuses raises
+    and sets nothing: the conf and SHOW ALL keep the previous value.
+    Sent on the query path, a SET maps its Spark key too."""
+    token = service.handshake("admin", "secret")
+    key = "datafusion.execution.target_partitions"
+
+    def settings():
+        h = service.create_prepared_statement(token, "SHOW ALL")
+        return {r["name"]: r["value"] for r in
+                service.fetch(token, service.execute(token, h)).to_pylist()}
+
+    service.execute_update(token, service.create_prepared_statement(
+        token, f"SET {key} = 6"))
+    with pytest.raises(Exception, match="INVALID_CONF_VALUE"):
+        service.execute_update(token, service.create_prepared_statement(
+            token, f"SET {key} = abc"))
+    session = service.sessions[token]
+    assert session.conf.get("spark.sql.shuffle.partitions") == "6"
+    assert settings()[key] == "6"
+    h = service.create_prepared_statement(token, f"SET {key} = 5")
+    assert service.fetch(token, service.execute(token, h)).num_rows == 0
+    assert session.conf.get("spark.sql.shuffle.partitions") == "5"
+    assert settings()[key] == "5"
+
+
 # ----------------------------------------------------------------- flight
 def test_flight_server_rejects_legacy_surface(spark, creds):
     """Only Flight SQL messages are served: a JSON action name, or a raw
@@ -309,6 +349,110 @@ def test_flight_server_rejects_legacy_surface(spark, creds):
         server.shutdown()
 
 
+@pytest.fixture()
+def served(spark, creds):
+    """(service, url) of a Flight SQL server on an ephemeral port."""
+    from iceberg_datafusion_arrow_flight_spark.service.flight_server import (
+        serve_background)
+    service = EngineService(spark)
+    server, _ = serve_background(service, port=0)
+    yield service, f"grpc://localhost:{server.port}"
+    server.shutdown()
+
+
+def _client(url):
+    from iceberg_datafusion_arrow_flight_spark.service.flightsql_client import (
+        FlightSqlClient)
+    return FlightSqlClient(url, "admin", "secret")
+
+
+def _query_descriptor(st):
+    from pyarrow import flight
+    from iceberg_datafusion_arrow_flight_spark.service.flightsql_proto import (
+        pack_any)
+    return flight.FlightDescriptor.for_command(pack_any(
+        "CommandPreparedStatementQuery",
+        prepared_statement_handle=st.handle.encode()))
+
+
+def test_flight_info_schema_is_the_streamed_schema(served):
+    """The client builds its table from DoGet's batches under
+    FlightInfo's schema, so the two must agree exactly — for decimal,
+    timestamp, nullable, nested, empty, bound and constant results."""
+    _, url = served
+    c = _client(url)
+    cases = [
+        ("SELECT CAST(1.5 AS DECIMAL(12, 3)) AS d,"
+         " CAST(NULL AS DECIMAL(38, 10)) AS dn", []),
+        ("SELECT TIMESTAMP '2024-01-02 03:04:05' AS ts,"
+         " TIMESTAMP_NTZ '2024-01-02 03:04:05' AS ntz", []),
+        ("SELECT id, IF(id > 0, id, NULL) AS maybe FROM range(3)", []),
+        ("SELECT map('a', 1) AS m, array(1, NULL) AS a,"
+         " named_struct('x', 1, 'y', array('z')) AS s", []),
+        ("SELECT 1 AS a, 'x' AS b, CAST(NULL AS DATE) AS d WHERE 1 = 0", []),
+        ("SELECT CAST($1 AS DECIMAL(10, 2)) AS p, $2 AS s", [3, "x"]),
+        ("SHOW ALL", []),
+    ]
+    for sql, args in cases:
+        st = c.prepare(sql)
+        if args:
+            c.bind(st, args)
+        info = c.client.get_flight_info(_query_descriptor(st))
+        streamed = c.client.do_get(info.endpoints[0].ticket).read_all()
+        assert info.schema.equals(streamed.schema, check_metadata=True), sql
+        if st.dataset_schema is not None:
+            assert st.dataset_schema.equals(info.schema), sql
+        c.close(st)
+
+
+def test_execution_error_arrives_at_do_get(served):
+    """GetFlightInfo only plans: a statement that fails while running
+    still returns its schema there, and DoGet raises the error."""
+    from pyarrow import flight
+    _, url = served
+    c = _client(url)
+    st = c.prepare("SELECT id, IF(id = 2, raise_error('boom'), id) AS v"
+                   " FROM range(3)")
+    info = c.client.get_flight_info(_query_descriptor(st))
+    assert info.schema.names == ["id", "v"]
+    with pytest.raises(flight.FlightError, match="boom"):
+        c.client.do_get(info.endpoints[0].ticket).read_all()
+    c.close(st)
+
+
+def test_failed_statement_update_leaves_no_statement(served):
+    """CommandStatementUpdate closes its statement even when the update
+    raises: a refused SET value, an unbound parameter."""
+    from pyarrow import flight
+    service, url = served
+    c = _client(url)
+    for sql in ("SET datafusion.execution.target_partitions = abc",
+                "SELECT $1 AS unbound"):
+        with pytest.raises(flight.FlightError):
+            c.execute_update(sql)
+    assert service.statements == {}
+
+
+def test_foreign_handle_is_unauthorized_on_every_verb(served):
+    """Another session's handle is refused as unauthorized by
+    GetFlightInfo, bind (DoPut), close (DoAction) and DoGet alike, and
+    the owner's statement is untouched."""
+    from pyarrow import flight
+    _, url = served
+    owner, other = _client(url), _client(url)
+    st = owner.prepare("SELECT $1 AS v")
+    owner.bind(st, [1])
+    ticket = owner.client.get_flight_info(
+        _query_descriptor(st)).endpoints[0].ticket
+    for call in (lambda: other.client.get_flight_info(_query_descriptor(st)),
+                 lambda: other.bind(st, [2]),
+                 lambda: other.close(st),
+                 lambda: other.client.do_get(ticket).read_all()):
+        with pytest.raises(flight.FlightUnauthorizedError):
+            call()
+    assert owner.execute(st).column("v").to_pylist() == [1]
+
+
 def test_set_statement_maps_datafusion_conf(service):
     """SURVEY §3.3: SET datafusion.* maps onto the session conf; unknown
     DataFusion keys are accepted and ignored (compat)."""
@@ -325,7 +469,7 @@ def test_set_statement_maps_datafusion_conf(service):
 
 def test_empty_result_keeps_schema(service):
     """lib.rs:282-286/339-342: an empty result still carries its schema
-    through the cache and fetch path."""
+    through the execute and fetch path."""
     token = service.handshake("admin", "secret")
     h = service.create_prepared_statement(
         token, "SELECT 1 AS a, 'x' AS b WHERE 1 = 0")
@@ -357,7 +501,7 @@ def test_show_all_and_df_settings(service):
 
 def test_cross_session_handle_denied(service):
     """ADVICE r1: a handle leaked across sessions must not execute in —
-    or expose cached results to — another session (the reference keys
+    or expose results to — another session (the reference keys
     all statement state per session, lib.rs:87-132)."""
     t1 = service.handshake("admin", "secret")
     t2 = service.handshake("admin", "secret")
@@ -450,13 +594,13 @@ def test_explain_statement_shapes(table_service):
     token = service.handshake("admin", "secret")
     h = service.create_prepared_statement(
         token, "EXPLAIN SELECT o_orderstatus, COUNT(*) FROM orders GROUP BY 1")
-    rows = service.results[service.execute(token, h)].to_pylist()
+    rows = service.fetch(token, service.execute(token, h)).to_pylist()
     assert [r["plan_type"] for r in rows] == ["logical_plan",
                                               "physical_plan"]
     assert "Aggregate" in rows[0]["plan"]
     h2 = service.create_prepared_statement(
         token, "EXPLAIN ANALYZE SELECT COUNT(*) FROM orders")
-    rows2 = service.results[service.execute(token, h2)].to_pylist()
+    rows2 = service.fetch(token, service.execute(token, h2)).to_pylist()
     assert [r["plan_type"] for r in rows2] == ["Plan with Metrics"]
 
 
@@ -464,7 +608,7 @@ def test_describe_statement_shape(table_service):
     service = table_service
     token = service.handshake("admin", "secret")
     h = service.create_prepared_statement(token, "DESCRIBE orders")
-    rows = service.results[service.execute(token, h)].to_pylist()
+    rows = service.fetch(token, service.execute(token, h)).to_pylist()
     cols = {r["column_name"]: (r["data_type"], r["is_nullable"])
             for r in rows}
     assert "o_orderkey" in cols and "o_totalprice" in cols
@@ -475,12 +619,10 @@ def test_describe_statement_shape(table_service):
 def test_concurrent_clients_stress_cache_and_sessions(service):
     """The Flight front door dispatches from a gRPC THREAD POOL: eight
     client threads hammer handshake → prepare → execute → fetch →
-    close concurrently against a 4-entry result cache, so evictions,
-    insertions, and move_to_end interleave constantly.  Every thread
-    must read back ITS OWN correct result every iteration (no
-    cross-contamination, no corrupted cache structure, no exceptions).
-    The results OrderedDict is exactly the structure concurrent
-    move_to_end/popitem would corrupt without the engine lock."""
+    close concurrently, so inserts into and pops from the shared
+    statement and ticket maps interleave constantly.  Every thread must
+    read back ITS OWN correct result every iteration (no
+    cross-contamination, no exceptions), and closing leaves no ticket."""
     import threading
 
     errors: list[str] = []
@@ -511,3 +653,4 @@ def test_concurrent_clients_stress_cache_and_sessions(service):
     assert not errors, errors[:5]
     assert not service.sessions            # every session closed
     assert not service.statements
+    assert not service.results
