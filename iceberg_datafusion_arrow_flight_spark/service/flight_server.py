@@ -64,13 +64,17 @@ class BasicAuthHandler(flight.ServerAuthHandler):
 
 
 def _flight_status(verb):
-    """``verb`` raising AuthError as unauthorized, KeyError as server error."""
+    """``verb`` raising AuthError as unauthorized and any other non-Flight
+    error (a Spark analysis or execution error included) as a server
+    error carrying only its message — never the server's traceback."""
     def mapped(*args):
         try:
             return verb(*args)
+        except flight.FlightError:
+            raise
         except AuthError as exc:
             raise flight.FlightUnauthorizedError(str(exc)) from exc
-        except KeyError as exc:
+        except Exception as exc:
             raise flight.FlightServerError(str(exc)) from exc
     return mapped
 

@@ -33,6 +33,16 @@ exercises:
   library in the container — documented deviation; the *content* matches
   the spec's manifest entries: file path, record count, file size, column
   bounds).  Everything else round-trips the spec shape.
+- **Commits**: every metadata change — writes, deletes, schema and
+  partition evolution, refs, rollback, expiry — goes through one method,
+  :meth:`IcebergTable._commit`, on the ``(location, metadata)`` its
+  caller loaded and validated.  In order it applies the caller's
+  changes, adds the snapshot (fresh id, next sequence number, stamped
+  delete files, then ``current-snapshot-id`` + ``snapshot-log`` or the
+  branch ref), appends the prior location to ``metadata-log``, writes
+  the next version file and CASes the catalog pointer from the loaded
+  location — so a check made on that load holds at the commit, or the
+  commit raises :class:`CommitFailedError`.
 
 Scale: the data path is pure Spark — ``df.write.parquet`` on the executors,
 ``spark.read.schema(<write schema from metadata>).parquet(paths)`` on read
@@ -259,9 +269,7 @@ class IcebergTable:
 
     def schema_fields(self) -> list[dict]:
         md = self._load_metadata()[1]
-        (schema,) = [s for s in md["schemas"]
-                     if s["schema-id"] == md["current-schema-id"]]
-        return schema["fields"]
+        return _schema_of(md, md["current-schema-id"])
 
     # -- write path ---------------------------------------------------------
 
@@ -311,20 +319,15 @@ class IcebergTable:
                 f"branch {branch!r} does not descend from the current "
                 f"snapshot — main advanced since staging; re-stage")
         now = _now_ms()
-        metadata = dict(metadata)
-        metadata["current-snapshot-id"] = head
-        metadata["snapshot-log"] = metadata["snapshot-log"] + [
-            {"timestamp-ms": now, "snapshot-id": s["snapshot-id"]}
-            for s in reversed(chain)]
+        changes = {
+            "current-snapshot-id": head,
+            "snapshot-log": metadata["snapshot-log"] + [
+                {"timestamp-ms": now, "snapshot-id": s["snapshot-id"]}
+                for s in reversed(chain)]}
         if drop_ref:
-            refs = dict(metadata["refs"])
-            del refs[branch]
-            metadata["refs"] = refs
-        metadata["last-updated-ms"] = now
-        new_location = _write_metadata(
-            metadata["location"], _next_version(base_location), metadata)
-        self.catalog._swap_pointer(
-            self.namespace, self.name, base_location, new_location)
+            changes["refs"] = {k: r for k, r in metadata["refs"].items()
+                               if k != branch}
+        self._commit(base_location, metadata, changes)
         return head
 
     def overwrite(self, df: DataFrame) -> int:
@@ -353,19 +356,7 @@ class IcebergTable:
                 f"{self.namespace}.{self.name}: base snapshot moved "
                 f"({expect_snapshot} -> {metadata['current-snapshot-id']});"
                 " re-plan the operation")
-        # Branch-targeted commit (write-audit-publish): the snapshot
-        # chains off the BRANCH head and only the branch ref moves —
-        # the main history (current-snapshot-id, snapshot-log) is
-        # untouched until publish_branch() fast-forwards it.
-        if to_branch is not None:
-            ref = metadata.get("refs", {}).get(to_branch)
-            if ref is not None and ref["type"] != "branch":
-                raise ValueError(
-                    f"ref {to_branch!r} is a {ref['type']}, not a branch")
-            parent_id = (ref["snapshot-id"] if ref is not None
-                         else metadata["current-snapshot-id"])
-        else:
-            parent_id = metadata["current-snapshot-id"]
+        parent_id = _branch_head(metadata, to_branch)
         # Reads trust metadata (each file is read under the schema it is
         # stamped with), so a frame that does not match the current
         # schema by (name, type) is refused before any file is written.
@@ -401,14 +392,10 @@ class IcebergTable:
             sequence_number=metadata["last-sequence-number"] + 1)
             for e in _collect_entries(data_dir)]
 
-        snapshot_id = int(uuid.uuid4().int % (1 << 62)) + 1
+        parent = (_snapshot(metadata, parent_id)
+                  if operation == "append" and parent_id else None)
         manifest_path = os.path.join(
-            location, "metadata", f"manifest-{snapshot_id}.json")
-        if operation == "append" and parent_id:
-            parent = _snapshot(metadata, parent_id)
-            prior = _read_manifest_paths(parent)
-        else:
-            prior = []
+            location, "metadata", f"manifest-{write_id}.json")
         # Row-level DML (merge/delete) keeps the untouched files by copying
         # their entries into the new manifest verbatim — the copy-on-write
         # contract: surviving files are referenced, never rewritten.
@@ -417,16 +404,15 @@ class IcebergTable:
             "schema-id": metadata["current-schema-id"],
             "content": "data",
             "entries": [e.__dict__ for e in manifest_entries],
-            "prior-manifests": prior if operation == "append" else [],
+            "prior-manifests": (_read_manifest_paths(parent)
+                                if parent else []),
         })
-
-        now = _now_ms()
         summary = {
             "operation": operation,
             "added-data-files": str(len(entries)),
             "added-records": str(sum(e.record_count for e in entries)),
+            **(summary_extra or {}),
         }
-        summary.update(summary_extra or {})
         # Merge-on-read delete files carry forward: appends cannot
         # invalidate a positional delete (new files have new paths), so
         # they inherit the parent's list; every REWRITE operation must
@@ -434,54 +420,74 @@ class IcebergTable:
         # positions point into are gone or rewritten with deletes
         # applied), row-level DML passes the carried list itself.
         if delete_files is None:
-            if operation == "append" and parent_id:
-                parent = _snapshot(metadata, parent_id)
-                delete_files = parent.get("delete-files", [])
-            else:
-                delete_files = []
-        # Delete files committed WITH this snapshot carry sequence=None
-        # as a placeholder; it must be stamped from the SAME metadata
-        # load the snapshot's own sequence derives from.  A caller
-        # pre-computing it from an earlier load can go stale: a
-        # concurrent branch-targeted commit bumps last-sequence-number
-        # without moving current-snapshot-id, so the expect_snapshot
-        # guard passes while the pre-computed value is one low — and a
-        # too-low equality-delete sequence erases rows it must spare.
-        delete_files = [
-            {**f, "sequence": metadata["last-sequence-number"] + 1}
-            if ("sequence" in f and f["sequence"] is None) else f
-            for f in delete_files]
-        snapshot = {
-            "snapshot-id": snapshot_id,
-            "parent-snapshot-id": parent_id,
-            "sequence-number": metadata["last-sequence-number"] + 1,
-            "timestamp-ms": now,
-            "manifest-list": manifest_path,
-            "summary": summary,
-            "schema-id": metadata["current-schema-id"],
-            "delete-files": delete_files,
-        }
-        metadata = dict(metadata)
-        metadata["last-sequence-number"] += 1
-        metadata["last-updated-ms"] = now
-        metadata["snapshots"] = metadata["snapshots"] + [snapshot]
-        if to_branch is not None:
-            refs = dict(metadata.get("refs", {}))
-            refs[to_branch] = {"snapshot-id": snapshot_id,
-                               "type": "branch"}
-            metadata["refs"] = refs
-        else:
-            metadata["current-snapshot-id"] = snapshot_id
-            metadata["snapshot-log"] = metadata["snapshot-log"] + [
-                {"timestamp-ms": now, "snapshot-id": snapshot_id}]
-        metadata["metadata-log"] = metadata["metadata-log"] + [
-            {"timestamp-ms": now, "metadata-file": base_location}]
-
-        version = _next_version(base_location)
-        new_location = _write_metadata(location, version, metadata)
+            delete_files = parent.get("delete-files", []) if parent else []
         # Atomic publish: losers raise CommitFailedError and must re-read +
         # re-apply (their already-written data files are unreferenced, i.e.
         # orphans — same cleanup story as real Iceberg).
+        return self._commit(base_location, metadata,
+                            manifest_list=manifest_path, summary=summary,
+                            delete_files=delete_files, branch=to_branch)
+
+    def _commit(self, base_location: str, metadata: dict,
+                changes: dict | None = None,
+                manifest_list: str | None = None,
+                summary: dict | None = None,
+                delete_files: list[dict] | None = None,
+                branch: str | None = None) -> int | None:
+        """The one commit path for every metadata change.  ``metadata``
+        is what the caller loaded from ``base_location`` and validated
+        against; the CAS swaps the pointer only if it still names that
+        location, so every check made on the load holds at the commit
+        (else :class:`CommitFailedError`, and the caller re-plans).
+
+        In order: ``changes`` (top-level metadata keys) replace their
+        loaded values; with a ``manifest_list`` a new snapshot is added
+        — fresh id, the next sequence number, ``summary`` and
+        ``delete_files``, parented on the head of ``branch`` (None:
+        main) — and becomes ``current-snapshot-id`` with a
+        ``snapshot-log`` entry, or moves the branch ref only (write-
+        audit-publish: main is untouched until publish_branch); the
+        loaded location joins ``metadata-log``; the next version file
+        is written and the pointer swapped.  Returns the new snapshot
+        id, or None for a commit without one."""
+        now = _now_ms()
+        new = {**metadata, **(changes or {}), "last-updated-ms": now}
+        snapshot_id = None
+        if manifest_list is not None:
+            snapshot_id = int(uuid.uuid4().int % (1 << 62)) + 1
+            seq = metadata["last-sequence-number"] + 1
+            # Delete files committed WITH this snapshot carry
+            # sequence=None: stamped here from the load the snapshot's
+            # own sequence derives from.  A value pre-computed from an
+            # earlier load can be one low (a branch-targeted commit
+            # bumps last-sequence-number without moving the current
+            # snapshot), and a too-low equality-delete sequence erases
+            # rows it must spare.
+            new["snapshots"] = new["snapshots"] + [{
+                "snapshot-id": snapshot_id,
+                "parent-snapshot-id": _branch_head(metadata, branch),
+                "sequence-number": seq,
+                "timestamp-ms": now,
+                "manifest-list": manifest_list,
+                "summary": summary,
+                "schema-id": new["current-schema-id"],
+                "delete-files": [
+                    {**f, "sequence": seq}
+                    if "sequence" in f and f["sequence"] is None else f
+                    for f in delete_files or []],
+            }]
+            new["last-sequence-number"] = seq
+            if branch is not None:
+                new["refs"] = {**new.get("refs", {}), branch: {
+                    "snapshot-id": snapshot_id, "type": "branch"}}
+            else:
+                new["current-snapshot-id"] = snapshot_id
+                new["snapshot-log"] = new["snapshot-log"] + [
+                    {"timestamp-ms": now, "snapshot-id": snapshot_id}]
+        new["metadata-log"] = new["metadata-log"] + [
+            {"timestamp-ms": now, "metadata-file": base_location}]
+        new_location = _write_metadata(
+            new["location"], _next_version(base_location), new)
         self.catalog._swap_pointer(
             self.namespace, self.name, base_location, new_location)
         return snapshot_id
@@ -493,19 +499,18 @@ class IcebergTable:
         schema version is committed through the same CAS — NO data files
         are rewritten; old files surface NULL for the new column at read
         time.  Returns the new schema id."""
-        _, metadata = self._load_metadata()
-        (schema,) = [s for s in metadata["schemas"]
-                     if s["schema-id"] == metadata["current-schema-id"]]
-        if any(f["name"] == name for f in schema["fields"]):
+        base_location, metadata = self._load_metadata()
+        fields = _schema_of(metadata, metadata["current-schema-id"])
+        if any(f["name"] == name for f in fields):
             raise ValueError(f"column {name!r} already exists")
         # max over ALL schemas, not just current: a retired (dropped)
         # field's id must never be reused or old data would resurrect
         max_field = max((f["id"] for s in metadata["schemas"]
                          for f in s["fields"]), default=0)
         return self._commit_schema(
-            schema["fields"] + [
-                {"id": max_field + 1, "name": name, "required": False,
-                 "type": spark_type}])
+            base_location, metadata,
+            fields + [{"id": max_field + 1, "name": name,
+                       "required": False, "type": spark_type}])
 
     def update_partition_spec(self, partition_by: list[str]) -> int:
         """Partition-spec evolution (Iceberg REPLACE PARTITION FIELD /
@@ -517,7 +522,8 @@ class IcebergTable:
         Returns the new spec id."""
         base_location, metadata = self._load_metadata()
         fields = _parse_partition_spec(partition_by)
-        known = {f["name"] for f in self.schema_fields()}
+        known = {f["name"] for f in
+                 _schema_of(metadata, metadata["current-schema-id"])}
         for pf in fields:
             if pf["source"] not in known:
                 raise ValueError(
@@ -525,15 +531,10 @@ class IcebergTable:
                     "not in schema")
         new_id = max(s["spec-id"]
                      for s in metadata["partition-specs"]) + 1
-        metadata = dict(metadata)
-        metadata["partition-specs"] = metadata["partition-specs"] + [
-            {"spec-id": new_id, "fields": fields}]
-        metadata["default-spec-id"] = new_id
-        metadata["last-updated-ms"] = _now_ms()
-        new_location = _write_metadata(
-            metadata["location"], _next_version(base_location), metadata)
-        self.catalog._swap_pointer(
-            self.namespace, self.name, base_location, new_location)
+        self._commit(base_location, metadata, {
+            "partition-specs": metadata["partition-specs"] + [
+                {"spec-id": new_id, "fields": fields}],
+            "default-spec-id": new_id})
         return new_id
 
     # -- maintenance --------------------------------------------------------
@@ -598,17 +599,10 @@ class IcebergTable:
             dead_files.update(d["path"]
                               for d in s.get("delete-files", [])
                               if d["path"] not in live_files)
-        now = _now_ms()
-        new_md = dict(metadata)
-        new_md["snapshots"] = keep
-        new_md["snapshot-log"] = [
-            h for h in metadata["snapshot-log"]
-            if h["snapshot-id"] in keep_ids]
-        new_md["last-updated-ms"] = now
-        version = _next_version(base_location)
-        new_location = _write_metadata(metadata["location"], version, new_md)
-        self.catalog._swap_pointer(
-            self.namespace, self.name, base_location, new_location)
+        self._commit(base_location, metadata, {
+            "snapshots": keep,
+            "snapshot-log": [h for h in metadata["snapshot-log"]
+                             if h["snapshot-id"] in keep_ids]})
         for path in sorted(dead_manifests | dead_files):
             try:
                 os.remove(path)
@@ -696,47 +690,22 @@ class IcebergTable:
         if n_before <= 1:
             return {"manifests_before": n_before,
                     "manifests_after": n_before, "rewritten": False}
-        entries = _read_all_entries(snap)
-        location = metadata["location"]
-        snapshot_id = int(uuid.uuid4().int % (1 << 62)) + 1
         manifest_path = os.path.join(
-            location, "metadata", f"manifest-{snapshot_id}.json")
+            metadata["location"], "metadata",
+            f"manifest-{uuid.uuid4().hex[:12]}.json")
         _write_json(manifest_path, {
             "schema-id": metadata["current-schema-id"],
             "content": "data",
-            "entries": [e.__dict__ for e in entries],
+            "entries": [e.__dict__ for e in _read_all_entries(snap)],
             "prior-manifests": [],
         })
-        now = _now_ms()
-        snapshot = {
-            "snapshot-id": snapshot_id,
-            "parent-snapshot-id": current,
-            "sequence-number": metadata["last-sequence-number"] + 1,
-            "timestamp-ms": now,
-            "manifest-list": manifest_path,
-            "summary": {
-                "operation": "replace",
-                "rewritten-manifests": str(n_before),
-                "added-manifests": "1",
-                "added-data-files": "0",
-                "added-records": "0",
-            },
-            "schema-id": metadata["current-schema-id"],
-            "delete-files": snap.get("delete-files", []),
-        }
-        metadata = dict(metadata)
-        metadata["last-sequence-number"] += 1
-        metadata["last-updated-ms"] = now
-        metadata["snapshots"] = metadata["snapshots"] + [snapshot]
-        metadata["current-snapshot-id"] = snapshot_id
-        metadata["snapshot-log"] = metadata["snapshot-log"] + [
-            {"timestamp-ms": now, "snapshot-id": snapshot_id}]
-        metadata["metadata-log"] = metadata["metadata-log"] + [
-            {"timestamp-ms": now, "metadata-file": base_location}]
-        new_location = _write_metadata(
-            location, _next_version(base_location), metadata)
-        self.catalog._swap_pointer(
-            self.namespace, self.name, base_location, new_location)
+        self._commit(base_location, metadata, manifest_list=manifest_path,
+                     summary={"operation": "replace",
+                              "rewritten-manifests": str(n_before),
+                              "added-manifests": "1",
+                              "added-data-files": "0",
+                              "added-records": "0"},
+                     delete_files=snap.get("delete-files", []))
         return {"manifests_before": n_before, "manifests_after": 1,
                 "rewritten": True}
 
@@ -796,44 +765,23 @@ class IcebergTable:
         return self._commit_write(df, operation="replace",
                                   expect_snapshot=base_snapshot)
 
-    def _commit_schema(self, new_fields: list[dict],
-                       respec=None) -> int:
+    def _commit_schema(self, base_location: str, metadata: dict,
+                       new_fields: list[dict],
+                       specs: list[dict] | None = None) -> int:
         """Append a new schema version and point current-schema-id at it
-        (metadata-only CAS commit, shared by all evolution ops).
-        ``respec(metadata)`` may return replacement partition-specs to
-        commit atomically with the schema change (rename uses it)."""
-        base_location, metadata = self._load_metadata()
+        (metadata-only commit on the caller's load, shared by all
+        evolution ops).  ``specs`` replaces the partition specs in the
+        same commit (rename uses it)."""
         new_id = max(s["schema-id"] for s in metadata["schemas"]) + 1
-        metadata = dict(metadata)
-        metadata["schemas"] = metadata["schemas"] + [
-            {"schema-id": new_id, "type": "struct", "fields": new_fields}]
-        metadata["current-schema-id"] = new_id
-        if respec is not None:
-            metadata["partition-specs"] = respec(metadata)
-        metadata["last-updated-ms"] = _now_ms()
-        new_location = _write_metadata(
-            metadata["location"], _next_version(base_location), metadata)
-        self.catalog._swap_pointer(
-            self.namespace, self.name, base_location, new_location)
+        changes = {
+            "schemas": metadata["schemas"] + [
+                {"schema-id": new_id, "type": "struct",
+                 "fields": new_fields}],
+            "current-schema-id": new_id}
+        if specs is not None:
+            changes["partition-specs"] = specs
+        self._commit(base_location, metadata, changes)
         return new_id
-
-    def _guard_equality_delete_column(self, name: str, op: str) -> None:
-        """Live equality-delete files bind key columns by NAME (a
-        documented simplification of the spec's field-id binding): a
-        rename/drop of a named column would silently orphan the
-        deletes, so it fails loudly instead — compact() folds the
-        deletes away first."""
-        sid = self._load_metadata()[1]["current-snapshot-id"]
-        if sid is None:
-            return
-        snap = _snapshot(self._load_metadata()[1], sid)
-        hit = [d for d in snap.get("delete-files", [])
-               if name in d.get("equality_cols", [])]
-        if hit:
-            raise ValueError(
-                f"cannot {op} column {name!r}: {len(hit)} live equality"
-                " delete file(s) bind it by name — run compact() first"
-                " to fold the deletes, then evolve the schema")
 
     def rename_column(self, old: str, new: str) -> int:
         """Iceberg rename: metadata-only — the field keeps its ID, so
@@ -842,21 +790,21 @@ class IcebergTable:
         Partition-spec fields referencing the column follow the rename
         (specs here bind sources by name; updating them preserves the
         by-id semantics real Iceberg gets for free)."""
-        fields = self.schema_fields()
+        base_location, metadata = self._load_metadata()
+        fields = _schema_of(metadata, metadata["current-schema-id"])
         if not any(f["name"] == old for f in fields):
             raise ValueError(f"column {old!r} does not exist")
         if any(f["name"] == new for f in fields):
             raise ValueError(f"column {new!r} already exists")
-        self._guard_equality_delete_column(old, "rename")
-        def respec(metadata):
-            return [
-                {**s, "fields": [
-                    {**pf, "source": new} if pf["source"] == old else pf
-                    for pf in s["fields"]]}
-                for s in metadata["partition-specs"]]
+        _guard_equality_delete_column(metadata, old, "rename")
         return self._commit_schema(
+            base_location, metadata,
             [{**f, "name": new} if f["name"] == old else f
-             for f in fields], respec)
+             for f in fields],
+            [{**s, "fields": [
+                {**pf, "source": new} if pf["source"] == old else pf
+                for pf in s["fields"]]}
+             for s in metadata["partition-specs"]])
 
     def drop_column(self, name: str) -> int:
         """Iceberg drop: metadata-only — the field id is retired, so the
@@ -865,19 +813,20 @@ class IcebergTable:
         data (the per-file projection by id never selects a retired
         id).  Refuses to drop a column the CURRENT partition spec
         transforms (real Iceberg's rule — the write path would break)."""
-        self._guard_equality_delete_column(name, "drop")
-        fields = self.schema_fields()
+        base_location, metadata = self._load_metadata()
+        _guard_equality_delete_column(metadata, name, "drop")
+        fields = _schema_of(metadata, metadata["current-schema-id"])
         if not any(f["name"] == name for f in fields):
             raise ValueError(f"column {name!r} does not exist")
         if len(fields) == 1:
             raise ValueError("cannot drop the last column")
-        _, metadata = self._load_metadata()
         for pf in _spec_fields(metadata):
             if pf["source"] == name:
                 raise ValueError(
                     f"column {name!r} is a partition source of the "
                     "current spec — update_partition_spec first")
         return self._commit_schema(
+            base_location, metadata,
             [f for f in fields if f["name"] != name])
 
     # -- snapshot refs (tags / branches) ------------------------------------
@@ -906,13 +855,7 @@ class IcebergTable:
                     f"ref {name!r} is a {refs[name]['type']}; pass "
                     f"kind={refs[name]['type']!r} to move it")
         refs[name] = {"snapshot-id": sid, "type": kind}
-        metadata = dict(metadata)
-        metadata["refs"] = refs
-        metadata["last-updated-ms"] = _now_ms()
-        new_location = _write_metadata(
-            metadata["location"], _next_version(base_location), metadata)
-        self.catalog._swap_pointer(
-            self.namespace, self.name, base_location, new_location)
+        self._commit(base_location, metadata, {"refs": refs})
 
     def resolve_ref(self, name: str) -> int:
         _, metadata = self._load_metadata()
@@ -933,16 +876,10 @@ class IcebergTable:
         Iceberg's history table shows it."""
         base_location, metadata = self._load_metadata()
         _snapshot(metadata, snapshot_id)  # loud if unknown
-        now = _now_ms()
-        metadata = dict(metadata)
-        metadata["current-snapshot-id"] = snapshot_id
-        metadata["last-updated-ms"] = now
-        metadata["snapshot-log"] = metadata["snapshot-log"] + [
-            {"timestamp-ms": now, "snapshot-id": snapshot_id}]
-        new_location = _write_metadata(
-            metadata["location"], _next_version(base_location), metadata)
-        self.catalog._swap_pointer(
-            self.namespace, self.name, base_location, new_location)
+        self._commit(base_location, metadata, {
+            "current-snapshot-id": snapshot_id,
+            "snapshot-log": metadata["snapshot-log"] + [
+                {"timestamp-ms": _now_ms(), "snapshot-id": snapshot_id}]})
 
     # -- incremental scan ---------------------------------------------------
 
@@ -1247,7 +1184,7 @@ class IcebergTable:
         matches = (live.where(F.coalesce(cond, F.lit(False)))
                    .select(F.col("__dfile").alias("file_uri"),
                            F.col("__dpos").alias("pos")))
-        return self._commit_mor_deletes(base_location, md, snap, matches)
+        return self._commit_mor_deletes(base_location, md, matches)
 
     def delete_keys_mor(self, spark: SparkSession, keys: DataFrame,
                         key_cols: list[str]) -> dict:
@@ -1275,7 +1212,7 @@ class IcebergTable:
                              key_cols, "left_semi")
                    .select(F.col("__dfile").alias("file_uri"),
                            F.col("__dpos").alias("pos")))
-        return self._commit_mor_deletes(base_location, md, snap, matches)
+        return self._commit_mor_deletes(base_location, md, matches)
 
     def merge_upsert_mor(self, spark: SparkSession, source: DataFrame,
                          key_cols: list[str],
@@ -1334,11 +1271,10 @@ class IcebergTable:
             del_dir = os.path.join(location, "data", write_id)
             (_keys_as(all_keys, md, key_cols).distinct()
              .write.mode("errorifexists").parquet(del_dir))
-            # sequence=None: stamped inside _commit_write from the same
-            # reloaded metadata the snapshot's sequence derives from —
-            # a value computed from THIS load could be one low if a
-            # concurrent branch-targeted commit bumped the counter
-            # without moving current-snapshot-id (ADVICE r3).
+            # sequence=None: stamped by _commit from the metadata
+            # _commit_write reloads — a value computed from THIS load
+            # could be one low if a concurrent branch-targeted commit
+            # bumped the counter without moving current-snapshot-id.
             eq_files = [{"path": e.file_path,
                          "record_count": e.record_count,
                          "equality_cols": list(key_cols), "sequence": None}
@@ -1387,114 +1323,51 @@ class IcebergTable:
             raise ValueError(
                 f"equality delete key column(s) {missing} not in the "
                 f"table schema — a commit would only fail at read time")
-        base_snapshot = md["current-snapshot-id"]
-        if base_snapshot is None:
+        if md["current-snapshot-id"] is None:
             return {"snapshot_id": None, "delete_files": 0,
                     "deleted_keys": 0}
-        snap = _snapshot(md, base_snapshot)
-        location = md["location"]
-        write_id = uuid.uuid4().hex[:12]
-        del_dir = os.path.join(location, "data", write_id)
-        _keys_as(keys, md, key_cols).distinct().write.mode(
-            "errorifexists").parquet(del_dir)
-        seq = md["last-sequence-number"] + 1
-        new_files = [{"path": e.file_path, "record_count": e.record_count,
-                      "equality_cols": list(key_cols), "sequence": seq}
-                     for e in _collect_entries(del_dir) if e.record_count]
-        if not new_files:
-            shutil.rmtree(del_dir, ignore_errors=True)
-            return {"snapshot_id": None, "delete_files": 0,
-                    "deleted_keys": 0}
-        now = _now_ms()
-        snapshot_id = int(uuid.uuid4().int % (1 << 62)) + 1
-        snapshot = {
-            "snapshot-id": snapshot_id,
-            "parent-snapshot-id": base_snapshot,
-            "sequence-number": seq,
-            "timestamp-ms": now,
-            "manifest-list": snap["manifest-list"],
-            "summary": {
-                "operation": "delete",
-                "delete-mode": "merge-on-read-equality",
-                "added-delete-files": str(len(new_files)),
-                "added-equality-deletes": str(
-                    sum(f["record_count"] for f in new_files)),
-            },
-            "schema-id": md["current-schema-id"],
-            "delete-files": snap.get("delete-files", []) + new_files,
-        }
-        new_md = dict(md)
-        new_md["last-sequence-number"] = seq
-        new_md["last-updated-ms"] = now
-        new_md["snapshots"] = md["snapshots"] + [snapshot]
-        new_md["current-snapshot-id"] = snapshot_id
-        new_md["snapshot-log"] = md["snapshot-log"] + [
-            {"timestamp-ms": now, "snapshot-id": snapshot_id}]
-        new_md["metadata-log"] = md["metadata-log"] + [
-            {"timestamp-ms": now, "metadata-file": base_location}]
-        version = _next_version(base_location)
-        new_location = _write_metadata(location, version, new_md)
-        self.catalog._swap_pointer(
-            self.namespace, self.name, base_location, new_location)
-        return {"snapshot_id": snapshot_id,
-                "delete_files": len(new_files),
-                "deleted_keys": sum(f["record_count"] for f in new_files)}
+        return self._commit_mor_deletes(
+            base_location, md, _keys_as(keys, md, key_cols).distinct(),
+            key_cols)
 
     def _commit_mor_deletes(self, base_location: str, md: dict,
-                            snap: dict, matches: DataFrame) -> dict:
-        """Write (file_uri, pos) matches as position-delete parquet and
-        commit a merge-on-read delete snapshot (shared tail of
-        delete_where_mor / delete_keys_mor)."""
-        prior_deletes = snap.get("delete-files", [])
-        base_snapshot = snap["snapshot-id"]
-        location = md["location"]
-        write_id = uuid.uuid4().hex[:12]
-        del_dir = os.path.join(location, "data", write_id)
-        matches.write.mode("errorifexists").parquet(del_dir)
-        new_files = [{"path": e.file_path, "record_count": e.record_count}
+                            rows: DataFrame,
+                            equality_cols: list[str] | None = None
+                            ) -> dict:
+        """Write ``rows`` as merge-on-read delete files and commit them
+        as a delete snapshot on the caller's load (shared tail of
+        delete_where_mor / delete_keys_mor / delete_keys_mor_equality):
+        (file_uri, pos) rows are position deletes; with
+        ``equality_cols`` the rows are key values of an equality delete,
+        sequenced by the commit.  Data manifests are UNCHANGED (the
+        point of MOR) — the new snapshot reuses the parent's manifest
+        list and only the delete-file list grows.  No matched row → no
+        files, no commit."""
+        snap = _snapshot(md, md["current-snapshot-id"])
+        del_dir = os.path.join(md["location"], "data", uuid.uuid4().hex[:12])
+        rows.write.mode("errorifexists").parquet(del_dir)
+        if equality_cols is None:
+            kind, mode, counted, eq = ("position", "merge-on-read",
+                                       "deleted_rows", {})
+        else:
+            kind, mode, counted, eq = (
+                "equality", "merge-on-read-equality", "deleted_keys",
+                {"equality_cols": list(equality_cols), "sequence": None})
+        new_files = [{"path": e.file_path, "record_count": e.record_count,
+                      **eq}
                      for e in _collect_entries(del_dir) if e.record_count]
-        n_deleted = sum(f["record_count"] for f in new_files)
+        n_rows = sum(f["record_count"] for f in new_files)
         if not new_files:
             shutil.rmtree(del_dir, ignore_errors=True)
-            return {"snapshot_id": None, "delete_files": 0,
-                    "deleted_rows": 0}
-
-        # Commit: data manifests are UNCHANGED (the point of MOR) — the
-        # new snapshot reuses the parent's manifest list and only the
-        # delete-file list grows.
-        now = _now_ms()
-        snapshot_id = int(uuid.uuid4().int % (1 << 62)) + 1
-        snapshot = {
-            "snapshot-id": snapshot_id,
-            "parent-snapshot-id": base_snapshot,
-            "sequence-number": md["last-sequence-number"] + 1,
-            "timestamp-ms": now,
-            "manifest-list": snap["manifest-list"],
-            "summary": {
-                "operation": "delete",
-                "delete-mode": "merge-on-read",
-                "added-delete-files": str(len(new_files)),
-                "added-position-deletes": str(n_deleted),
-            },
-            "schema-id": md["current-schema-id"],
-            "delete-files": prior_deletes + new_files,
-        }
-        new_md = dict(md)
-        new_md["last-sequence-number"] += 1
-        new_md["last-updated-ms"] = now
-        new_md["snapshots"] = md["snapshots"] + [snapshot]
-        new_md["current-snapshot-id"] = snapshot_id
-        new_md["snapshot-log"] = md["snapshot-log"] + [
-            {"timestamp-ms": now, "snapshot-id": snapshot_id}]
-        new_md["metadata-log"] = md["metadata-log"] + [
-            {"timestamp-ms": now, "metadata-file": base_location}]
-        version = _next_version(base_location)
-        new_location = _write_metadata(location, version, new_md)
-        self.catalog._swap_pointer(
-            self.namespace, self.name, base_location, new_location)
-        return {"snapshot_id": snapshot_id,
-                "delete_files": len(new_files),
-                "deleted_rows": n_deleted}
+            return {"snapshot_id": None, "delete_files": 0, counted: 0}
+        snapshot_id = self._commit(
+            base_location, md, manifest_list=snap["manifest-list"],
+            summary={"operation": "delete", "delete-mode": mode,
+                     "added-delete-files": str(len(new_files)),
+                     f"added-{kind}-deletes": str(n_rows)},
+            delete_files=snap.get("delete-files", []) + new_files)
+        return {"snapshot_id": snapshot_id, "delete_files": len(new_files),
+                counted: n_rows}
 
     # -- read path ----------------------------------------------------------
 
@@ -1692,6 +1565,38 @@ def _resolve_sid(metadata: dict, snapshot_id: int | None,
                 f"no snapshot at or before {as_of_timestamp_ms}")
         sid = max(eligible, key=lambda h: h["timestamp-ms"])["snapshot-id"]
     return metadata["current-snapshot-id"] if sid is None else sid
+
+
+def _branch_head(metadata: dict, branch: str | None) -> int | None:
+    """The snapshot a commit to ``branch`` chains off: the branch head,
+    or the current snapshot for main (None) and for a branch's first
+    commit.  Write-audit-publish stages on a branch; a tag cannot take
+    commits."""
+    ref = metadata.get("refs", {}).get(branch) if branch else None
+    if ref is None:
+        return metadata["current-snapshot-id"]
+    if ref["type"] != "branch":
+        raise ValueError(f"ref {branch!r} is a {ref['type']}, not a branch")
+    return ref["snapshot-id"]
+
+
+def _guard_equality_delete_column(metadata: dict, name: str,
+                                  op: str) -> None:
+    """Live equality-delete files bind key columns by NAME (a
+    documented simplification of the spec's field-id binding): a
+    rename/drop of a named column would silently orphan the deletes,
+    so it fails loudly instead — compact() folds the deletes away
+    first."""
+    sid = metadata["current-snapshot-id"]
+    if sid is None:
+        return
+    hit = [d for d in _snapshot(metadata, sid).get("delete-files", [])
+           if name in d.get("equality_cols", [])]
+    if hit:
+        raise ValueError(
+            f"cannot {op} column {name!r}: {len(hit)} live equality"
+            " delete file(s) bind it by name — run compact() first"
+            " to fold the deletes, then evolve the schema")
 
 
 def _schema_of(metadata: dict, schema_id: int) -> list[dict]:

@@ -1607,3 +1607,123 @@ def test_snapshot_read_plan_runs_no_spark_job(catalog, spark):
     expected = [(i, i % 5, None) for i in range(20)
                 if i != 3 and i % 5 != 4] + [(20, 2, "x"), (21, 1, "y")]
     assert rows == sorted(expected)
+
+
+# -- one commit path: invariants every metadata change keeps ---------------
+
+_COMMIT_KINDS = [
+    "append", "overwrite", "merge_upsert_mor", "delete_keys_mor_equality",
+    "delete_where_mor", "compact", "rewrite_manifests", "add_column",
+    "rename_column", "drop_column", "update_partition_spec", "set_ref",
+    "rollback_to", "append_to_branch", "publish_branch", "expire_snapshots",
+]
+
+
+@pytest.mark.parametrize("kind", _COMMIT_KINDS)
+def test_every_commit_kind_logs_prior_version_and_sequences_snapshot(
+        catalog, spark, kind):
+    """Each kind of commit writes exactly the next metadata version,
+    logs the location it replaced in ``metadata-log``, and a snapshot
+    it adds takes the next sequence number — as do the equality-delete
+    files that snapshot adds."""
+    from iceberg_datafusion_arrow_flight_spark.sources.iceberg_lite import (
+        _next_version)
+
+    def rows(keys):
+        return spark.createDataFrame([(k, k * 10) for k in keys],
+                                     "k long, v long")
+
+    def keys(ks):
+        return spark.createDataFrame([(k,) for k in ks], "k long")
+
+    t = catalog.create_table("log", kind, rows([1]))
+    first = t.append(rows(range(1, 6)))
+    t.append(rows(range(6, 11)))
+    prepare, commit = {
+        "append": (None, lambda: t.append(rows([100]))),
+        "overwrite": (None, lambda: t.overwrite(rows([100]))),
+        "merge_upsert_mor": (None, lambda: t.merge_upsert_mor(
+            spark, rows([1, 100]), ["k"], delete_keys=keys([2]))),
+        "delete_keys_mor_equality": (None, lambda: (
+            t.delete_keys_mor_equality(spark, keys([3]), ["k"]))),
+        "delete_where_mor": (None, lambda: t.delete_where_mor(spark,
+                                                              "k = 4")),
+        "compact": (None, lambda: t.compact(spark)),
+        "rewrite_manifests": (None, t.rewrite_manifests),
+        "add_column": (None, lambda: t.add_column("x", "string")),
+        "rename_column": (None, lambda: t.rename_column("v", "val")),
+        "drop_column": (None, lambda: t.drop_column("v")),
+        "update_partition_spec": (None, lambda: t.update_partition_spec(
+            ["bucket(2, k)"])),
+        "set_ref": (None, lambda: t.set_ref("release")),
+        "rollback_to": (None, lambda: t.rollback_to(first)),
+        "append_to_branch": (None, lambda: t.append_to_branch(
+            rows([200]), "audit")),
+        "publish_branch": (lambda: t.append_to_branch(rows([200]), "audit"),
+                           lambda: t.publish_branch("audit")),
+        "expire_snapshots": (None, lambda: t.expire_snapshots(keep_last=1)),
+    }[kind]
+    if prepare is not None:
+        prepare()
+    before_loc, before = t._load_metadata()
+    commit()
+    after_loc, after = t._load_metadata()
+    assert _next_version(after_loc) == _next_version(before_loc) + 1
+    assert after["metadata-log"][-1]["metadata-file"] == before_loc
+    old_ids = {s["snapshot-id"] for s in before["snapshots"]}
+    added = [s for s in after["snapshots"] if s["snapshot-id"] not in old_ids]
+    for snap in added:
+        assert snap["sequence-number"] == before["last-sequence-number"] + 1
+        assert after["last-sequence-number"] == snap["sequence-number"]
+        carried = {d["path"] for s in before["snapshots"]
+                   for d in s.get("delete-files", [])}
+        new_eq = [d for d in snap["delete-files"]
+                  if "equality_cols" in d and d["path"] not in carried]
+        assert all(d["sequence"] == snap["sequence-number"]
+                   for d in new_eq), new_eq
+        if kind in ("merge_upsert_mor", "delete_keys_mor_equality"):
+            assert new_eq
+
+
+@pytest.mark.parametrize("op", ["add", "rename", "drop"])
+def test_schema_change_commits_on_the_load_it_checked(catalog, spark, op):
+    """A schema change commits against the metadata it validated: a
+    concurrent commit landing between its checks and its commit makes
+    it raise CommitFailedError — it never rebuilds on the newer load.
+    Otherwise a concurrent add_column would vanish from the schema (and
+    its field id be reused), and a rename or drop would pass the
+    equality-delete guard while a delete binding the column committed
+    — after which every read fails."""
+    df = spark.createDataFrame([(1, 10), (2, 20)], "k long, v long")
+    t1 = catalog.create_table("race", op, df)
+    t1.append(df)
+    t2 = catalog.load_table("race", op)
+    orig = t1._commit_schema
+
+    def racing(*a, **k):
+        if op == "add":
+            t2.add_column("x", "string")
+        else:
+            t2.delete_keys_mor_equality(
+                spark, spark.createDataFrame([(10,)], "v long"), ["v"])
+        return orig(*a, **k)
+
+    t1._commit_schema = racing
+    change = {"add": lambda: t1.add_column("y", "string"),
+              "rename": lambda: t1.rename_column("v", "val"),
+              "drop": lambda: t1.drop_column("v")}[op]
+    with pytest.raises(CommitFailedError):
+        change()
+    t1._commit_schema = orig
+    if op == "add":
+        assert [(f["name"], f["id"]) for f in t1.schema_fields()] == [
+            ("k", 1), ("v", 2), ("x", 3)]
+        change()                          # a retry takes a fresh id
+        assert t1.schema_fields()[-1]["name"] == "y"
+        assert t1.schema_fields()[-1]["id"] == 4
+    else:
+        assert [f["name"] for f in t1.schema_fields()] == ["k", "v"]
+        assert [(r["k"], r["v"]) for r in t1.read(spark).collect()] == [
+            (2, 20)]
+        with pytest.raises(ValueError, match="live equality"):
+            change()                      # the retry sees the delete
