@@ -297,6 +297,10 @@ def rewrite_to_char(sql: str) -> str:
         if not m:
             out.append(sql[pos:])
             return "".join(out)
+        if sql.count("'", 0, m.start()) % 2:  # inside a string literal
+            out.append(sql[pos:m.end()])
+            pos = m.end()
+            continue
         comma = _scan_first_arg(sql, m.end())
         fmt_m = _TO_CHAR_FMT.match(sql, comma + 1) if comma is not None else None
         if fmt_m is None:

@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import duckdb
 import pytest
-from hypothesis import HealthCheck, given, settings, strategies as st
+from hypothesis import HealthCheck, example, given, settings, strategies as st
 
 from iceberg_datafusion_arrow_flight_spark.sources.registry import load_table
 
@@ -145,6 +145,7 @@ def _literal(draw):
 
 @settings(max_examples=300, deadline=None)
 @given(lits=st.lists(_literal(), min_size=1, max_size=4))
+@example(lits=["'to_char(,'", "')'"])
 def test_rewrite_is_identity_on_literal_only_statements(lits):
     """A statement whose only dialect-looking content sits INSIDE string
     literals must pass through the whole rewrite pipeline unchanged —
