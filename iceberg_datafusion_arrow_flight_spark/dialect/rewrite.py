@@ -28,14 +28,17 @@ import re
 
 # --------------------------------------------------------------- literals
 # The reference parses SQL with sqlparser, so its rewrites can never touch
-# the inside of a string literal.  The regex passes below get the same
-# guarantee by masking every single-quoted literal ('' is the SQL escape)
-# with an opaque sentinel before the literal-blind passes run, restoring
-# afterwards.  Passes whose *own syntax* includes a literal (SIMILAR TO,
-# to_char formats, AT TIME ZONE, regexp flags) run before masking — their
-# patterns only match a literal in keyword position, which cannot occur
-# inside another literal (literals don't nest).
-_LITERAL_RE = re.compile(r"'(?:[^']|'')*'")
+# the inside of a string literal or a comment.  The regex passes below get
+# the same guarantee by masking every single-quoted literal ('' is the SQL
+# escape), ``--`` line comment and ``/* */`` block comment with an opaque
+# sentinel before the literal-blind passes run, restoring afterwards.  One
+# left-to-right scan decides which of the three starts first, so a quote
+# inside a comment or a ``--`` inside a literal is just text.  Passes whose
+# *own syntax* includes a literal (SIMILAR TO, to_char formats, AT TIME
+# ZONE, regexp flags) run before masking — their patterns only match a
+# literal in keyword position, which cannot occur inside another literal
+# (literals don't nest).
+_LITERAL_RE = re.compile(r"'(?:[^']|'')*'|--[^\n]*|/\*.*?\*/", re.DOTALL)
 
 
 def _mask_literals(sql: str) -> tuple[str, list[str]]:
@@ -43,13 +46,16 @@ def _mask_literals(sql: str) -> tuple[str, list[str]]:
 
     def stash(m: re.Match) -> str:
         saved.append(m.group(0))
-        return f"'\x00{len(saved) - 1}\x00'"
+        token = f"\x00{len(saved) - 1}\x00"
+        # a comment stays comment-shaped, so no pass reads it as an operand
+        return f"'{token}'" if m.group(0)[0] == "'" else f"/*{token}*/"
 
     return _LITERAL_RE.sub(stash, sql), saved
 
 
 def _unmask_literals(sql: str, saved: list[str]) -> str:
-    return re.sub(r"'\x00(\d+)\x00'", lambda m: saved[int(m.group(1))], sql)
+    return re.sub(r"'\x00(\d+)\x00'|/\*\x00(\d+)\x00\*/",
+                  lambda m: saved[int(m.group(1) or m.group(2))], sql)
 
 # --------------------------------------------------------------- renames
 # DataFusion name → Spark name.  Only names with IDENTICAL argument order
@@ -290,6 +296,7 @@ def _scan_first_arg(sql: str, start: int) -> int | None:
 
 
 def rewrite_to_char(sql: str) -> str:
+    opaque = [m.span() for m in _LITERAL_RE.finditer(sql)]
     out = []
     pos = 0
     while True:
@@ -297,7 +304,7 @@ def rewrite_to_char(sql: str) -> str:
         if not m:
             out.append(sql[pos:])
             return "".join(out)
-        if sql.count("'", 0, m.start()) % 2:  # inside a string literal
+        if any(a <= m.start() < b for a, b in opaque):  # literal or comment
             out.append(sql[pos:m.end()])
             pos = m.end()
             continue

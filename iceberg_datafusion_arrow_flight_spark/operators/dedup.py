@@ -30,7 +30,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .partitioning import checkpoint_partitioned, fan_out, fits_broadcast
+from .partitioning import (checkpoint_partitioned, fan_out, fits_broadcast,
+                           partition_count)
 from .materialize import materialize, materialize_lazy
 
 
@@ -415,6 +416,9 @@ def connected_components(edges: DataFrame, src: str = "id_a",
     e = (edges.select(F.col(src).cast("long").alias("a"),
                       F.col(dst).cast("long").alias("b"))
          .transform(materialize))
+    # one partition count for every partitioned table below, sized to
+    # the edge list (see checkpoint_partitioned)
+    n = partition_count(e)
     # Two round regimes, decided once by whether the O(nodes) label
     # state fits the broadcast threshold (see operators/graph.py for
     # the twin decision in pagerank):
@@ -439,9 +443,10 @@ def connected_components(edges: DataFrame, src: str = "id_a",
                .agg(F.min("a").alias("label")))
     if broadcast_state is None:
         broadcast_state = fits_broadcast(labels0, labels0.count())
-    und = checkpoint_partitioned(mirrored, "a" if broadcast_state else "b")
+    und = checkpoint_partitioned(mirrored, "a" if broadcast_state else "b",
+                                 partitions=n)
     labels = (labels0 if broadcast_state
-              else checkpoint_partitioned(labels0, "node"))
+              else checkpoint_partitioned(labels0, "node", partitions=n))
     prev_sum = None
     for _ in range(max_iterations):
         label_side = F.broadcast(labels) if broadcast_state else labels
@@ -453,7 +458,7 @@ def connected_components(edges: DataFrame, src: str = "id_a",
                                   F.coalesce(F.col("__nl"), F.col("label")))
                           .alias("label")))
         labels = (labels.transform(materialize) if broadcast_state
-                  else checkpoint_partitioned(labels, "node"))
+                  else checkpoint_partitioned(labels, "node", partitions=n))
         s = labels.agg(F.sum("label")).first()[0]
         if s == prev_sum:
             return labels

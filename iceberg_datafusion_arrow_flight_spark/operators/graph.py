@@ -22,7 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .partitioning import checkpoint_partitioned, fits_broadcast
+from .partitioning import (checkpoint_partitioned, fits_broadcast,
+                           partition_count)
 from .materialize import materialize
 
 
@@ -55,15 +56,24 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
     skips it entirely, keeping the arithmetic bit-identical to the
     sink-free form the oracles unroll).
 
-    Plan shape per round: (edges+outdeg) ⋈ ranks (ONE hash join on the
-    source key — the out-degree is pre-joined into the checkpointed
-    edge list once, so the loop never re-shuffles the edge table
-    against ``deg``) → dst-keyed partial-agg sum → node left-join for
+    Plan shape: the edge list is localCheckpoint'ed once, and its size
+    estimate fixes one partition count ``n`` for every partitioned table
+    below (:func:`.partitioning.partition_count` — AQE's own coalescing
+    target, applied by hand because :func:`checkpoint_partitioned` has
+    to materialize with AQE off; small graphs iterate on one partition
+    per core, large ones on ``spark.sql.shuffle.partitions``).  One node
+    table (node, out-degree, seed flag) is checkpointed partitioned on
+    the node id, and ONE aggregate over it returns the node, dangling
+    and seed counts the set-up needs.  The teleport vector is a literal
+    projection of that table, so it stays co-partitioned with the
+    state: each round's ``reset ⋈ incoming`` plans without an exchange.
+    Per round: (edges+outdeg) ⋈ ranks (ONE hash join on the source key
+    — the out-degree is pre-joined into the checkpointed edge list
+    once) → dst-keyed partial-agg sum → node left-join for
     zero-indegree nodes.  Per-edge contributions stay the identical
     quotient rank/outdeg (same operands, same division — the
-    cross-engine rounding contract is untouched).  The edge list is
-    localCheckpoint'ed once up front and the
-    rank state every round — the same flat-lineage discipline as
+    cross-engine rounding contract is untouched).  The rank state is
+    checkpointed every round — the same flat-lineage discipline as
     :func:`..dedup.connected_components`; without it round k's plan
     would re-derive rounds 0..k-1.  All state is (node, rank) — bytes
     per node, never per edge — and every shuffle is keyed on node ids,
@@ -77,44 +87,40 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
     e = (edges.select(F.col(src).cast("long").alias("a"),
                       F.col(dst).cast("long").alias("b"))
          .transform(materialize))
-    deg = e.groupBy("a").agg(F.count(F.lit(1)).alias("__deg"))
-    nodes = (e.select(F.col("a").alias("node"))
-             .union(e.select(F.col("b").alias("node"))).distinct())
-    # Static dangling set: nodes with no out-edge.  Computed once;
-    # empty for symmetrized graphs, where the per-round redistribution
-    # job is skipped outright.
-    dangling = (nodes.join(deg, nodes["node"] == deg["a"], "left_anti")
-                .transform(materialize))
-    has_dangling = not dangling.isEmpty()
+    n = partition_count(e)
+    # The node universe src ∪ dst with its out-degree (0 = dangling)
+    # and teleport membership; uniform PageRank is the personalized
+    # form whose seeds are every node.
+    nodes = (e.select(F.col("a").alias("node"), F.lit(1).alias("__o"))
+             .unionAll(e.select(F.col("b").alias("node"), F.lit(0)))
+             .groupBy("node").agg(F.sum("__o").alias("__deg")))
     if reset is None:
-        ntot = nodes.agg(F.count(F.lit(1)).cast("double").alias("__n"))
-        base = (nodes.crossJoin(F.broadcast(ntot))
-                .select("node", F.round(F.lit(1.0) / F.col("__n"),
-                                        round_digits).alias("__reset")))
+        nodes = nodes.withColumn("__seed", F.lit(True))
     else:
-        seed_col = reset.columns[0]
         # Restrict to seeds that exist in the graph BEFORE normalizing:
         # otherwise absent seeds' teleport mass silently vanishes and
         # the walk no longer conserves probability.
-        seeds = (reset.select(F.col(seed_col).cast("long")
-                              .alias("__seed")).distinct()
-                 .join(nodes, F.col("__seed") == nodes["node"], "left_semi")
-                 .transform(materialize))
-        if seeds.isEmpty():
-            raise ValueError(
-                "personalized pagerank: no seed appears in the graph — "
-                "the teleport vector would be all-zero (NaN ranks)")
-        stot = seeds.agg(F.count(F.lit(1)).cast("double").alias("__s"))
-        base = (nodes
-                .join(F.broadcast(seeds),
-                      nodes["node"] == seeds["__seed"], "left")
-                .crossJoin(F.broadcast(stot))
-                .select("node",
-                        F.round(F.when(F.col("__seed").isNotNull(),
-                                       F.lit(1.0) / F.col("__s"))
-                                .otherwise(F.lit(0.0)),
-                                round_digits).alias("__reset")))
-    base = base.transform(materialize)
+        seeds = (reset.select(F.col(reset.columns[0]).cast("long")
+                              .alias("node"), F.lit(True).alias("__seed"))
+                 .distinct())
+        nodes = (nodes.join(F.broadcast(seeds), "node", "left")
+                 .select("node", "__deg",
+                         F.coalesce("__seed", F.lit(False)).alias("__seed")))
+    nodes = checkpoint_partitioned(nodes, "node", partitions=n)
+    n_nodes, n_dangling, n_seeds = nodes.agg(
+        F.count(F.lit(1)), F.count_if(F.col("__deg") == 0),
+        F.count_if("__seed")).first()
+    if n_seeds == 0:
+        raise ValueError(
+            "personalized pagerank: no seed appears in the graph — "
+            "the teleport vector would be all-zero (NaN ranks)")
+    base = nodes.select("node", F.round(
+        F.when(F.col("__seed"), F.lit(1.0) / F.lit(float(n_seeds)))
+        .otherwise(F.lit(0.0)), round_digits).alias("__reset"))
+    # Static dangling set: nodes with no out-edge.  Empty for
+    # symmetrized graphs, where the per-round redistribution job is
+    # skipped outright.
+    dangling = nodes.where(F.col("__deg") == 0).select("node")
     # Two per-round regimes, decided once by whether the O(nodes) rank
     # state fits the session broadcast threshold (overridable):
     #
@@ -134,18 +140,17 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
     # only per-round shuffle is the dst-keyed aggregation's O(nodes)
     # partial-agg output — the floor for message-passing by key.
     if broadcast_state is None:
-        broadcast_state = fits_broadcast(nodes, nodes.count())
+        broadcast_state = fits_broadcast(nodes, n_nodes)
+    deg = nodes.where(F.col("__deg") > 0).select(
+        F.col("node").alias("a"), "__deg")
     ew = checkpoint_partitioned(e.join(deg, "a"),
-                                "b" if broadcast_state else "a")
+                                "b" if broadcast_state else "a",
+                                partitions=n)
     ranks = base.select("node", F.col("__reset").alias("rank"))
-    if not broadcast_state:
-        ranks = checkpoint_partitioned(ranks, "node")
-    # Checkpoint cadence was A/B'd at sf0.1: per-round eager
-    # checkpointing beat an every-other-round variant (5.2 s vs 5.8 s
-    # min-of-2) — skipping a barrier makes the next materialization
-    # re-execute the unflattened round's joins, which costs more than
-    # the barrier saved.  Per-round is also what keeps plan depth
-    # constant at any iteration count.
+    # Every round is checkpointed: skipping a barrier makes the next
+    # materialization re-execute the unflattened round's joins, and the
+    # per-round cut is what keeps plan depth constant at any iteration
+    # count.
     for _ in range(iterations):
         rank_side = F.broadcast(ranks) if broadcast_state else ranks
         contrib = (ew.join(rank_side, ew["a"] == ranks["node"])
@@ -153,10 +158,10 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
                    .agg(F.sum(F.col("rank") / F.col("__deg")).alias("__m")))
         incoming = F.coalesce(F.col("__m"), F.lit(0.0))
         joined = base.join(contrib, base["node"] == contrib["b"], "left")
-        if has_dangling:
+        if n_dangling:
             # Dangling mass this round: Σ r_k over out-degree-0 nodes —
             # an O(nodes) semi-join + scalar agg, redistributed ∝ reset.
-            dmass = (ranks.join(dangling.select("node"), "node", "left_semi")
+            dmass = (ranks.join(dangling, "node", "left_semi")
                      .agg(F.coalesce(F.sum("rank"), F.lit(0.0))
                           .alias("__dm")))
             joined = joined.crossJoin(F.broadcast(dmass))
@@ -167,7 +172,7 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
                                  + F.lit(damping) * incoming,
                                  round_digits).alias("rank")))
         ranks = (ranks.transform(materialize) if broadcast_state
-                 else checkpoint_partitioned(ranks, "node"))
+                 else checkpoint_partitioned(ranks, "node", partitions=n))
     return ranks
 
 
@@ -411,16 +416,19 @@ def label_propagation(und: DataFrame, rounds: int = 3,
     per-round O(edges) exchange left is the (node, label) vote count's
     partial-agg output, the floor for message passing by key.
     Strategy choice never changes values — join strategy only."""
-    sym = symmetrize(und)
+    # Materialize the edge list first: it feeds the node universe and
+    # every round, and its size estimate fixes the one partition count
+    # of the fallback regime's tables (see checkpoint_partitioned).
+    sym = symmetrize(und).transform(materialize)
+    n = partition_count(sym)
     labels = (sym.select(F.col("a").alias("node")).distinct()
               .select("node", F.col("node").alias("label"))
               .transform(materialize))
     if broadcast_state is None:
         broadcast_state = fits_broadcast(labels, labels.count())
-    sym = (sym.transform(materialize) if broadcast_state
-           else checkpoint_partitioned(sym, "b"))
     if not broadcast_state:
-        labels = checkpoint_partitioned(labels, "node")
+        sym = checkpoint_partitioned(sym, "b", partitions=n)
+        labels = checkpoint_partitioned(labels, "node", partitions=n)
     for _ in range(rounds):
         state = labels.withColumnRenamed("node", "b")
         votes = (sym.join(F.broadcast(state) if broadcast_state else state,
@@ -435,7 +443,7 @@ def label_propagation(und: DataFrame, rounds: int = 3,
                     .alias("m"))
                .select("node", (-F.col("m.neg")).alias("label")))
         labels = (new.transform(materialize) if broadcast_state
-                  else checkpoint_partitioned(new, "node"))
+                  else checkpoint_partitioned(new, "node", partitions=n))
     return labels
 
 

@@ -24,13 +24,13 @@ import threading
 from pyspark.sql import DataFrame
 from .materialize import materialize
 
-# Serializes the AQE conf flip in :func:`checkpoint_partitioned`.  Two
+# Serializes the conf flip in :func:`checkpoint_partitioned`.  Two
 # concurrent callers could otherwise interleave save/flip/restore so one
 # captures prev='false' (the other's transient state) and "restores" it,
 # leaving AQE disabled session-wide forever.  Materialization blocks the
 # calling thread anyway, so the lock costs nothing beyond serializing
 # concurrent checkpoints — which the conf flip already required.
-_AQE_FLIP_LOCK = threading.Lock()
+_CONF_FLIP_LOCK = threading.Lock()
 
 
 def fan_out(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
@@ -82,7 +82,32 @@ def fits_broadcast(df: DataFrame, n_rows: int, bytes_per_row: int = 96
     return threshold > 0 and n_rows * bytes_per_row <= threshold
 
 
-def checkpoint_partitioned(df: DataFrame, *keys: str) -> DataFrame:
+def partition_count(df: DataFrame) -> int:
+    """Partitions for an iterative operator's checkpointed tables:
+    ``min(shuffle.partitions, max(defaultParallelism,
+    ceil(sizeInBytes / advisoryPartitionSizeInBytes)))``.
+
+    This is the target AQE's partition coalescing would reach, and
+    :func:`checkpoint_partitioned` has to materialize with AQE off, so
+    the operator applies it itself.  ``sizeInBytes`` is the optimizer's
+    estimate and runs no job; pass a materialized (leaf) table — the
+    estimate of an unmaterialized join is the product of its children's
+    sizes without CBO, which would always give ``shuffle.partitions``.
+    Small inputs get one partition per core instead of paying a task
+    per (mostly empty) shuffle partition every round; at scale the count
+    stays ``spark.sql.shuffle.partitions``."""
+    spark = df.sparkSession
+    conf = spark.conf
+    advisory = _parse_spark_bytes(conf.get(
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes", "64MB"))
+    size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    return min(int(conf.get("spark.sql.shuffle.partitions")),
+               max(spark.sparkContext.defaultParallelism,
+                   -(-size // advisory)))
+
+
+def checkpoint_partitioned(df: DataFrame, *keys: str,
+                           partitions: int | None = None) -> DataFrame:
     """Eager ``localCheckpoint`` that KEEPS a hash partitioning on
     ``keys`` visible to the planner.
 
@@ -97,18 +122,35 @@ def checkpoint_partitioned(df: DataFrame, *keys: str) -> DataFrame:
     join) exchange-free — verified by plan inspection: the per-round
     ENSURE_REQUIREMENTS exchange disappears.
 
+    With AQE off nothing coalesces the shuffle partitions, so the
+    helper sizes them itself: ``partitions`` (default
+    :func:`partition_count` of ``df``) is both the count of the output
+    partitioning and ``spark.sql.shuffle.partitions`` for the
+    materialization, so every exchange inside it lands on the same
+    count and the final repartition is planned away when the plan is
+    already partitioned on ``keys``.  An operator computes the count
+    once from its edge table and passes it to every call, which keeps
+    the tables it joins co-partitioned.
+
     The conf flip is session-wide for its (short) duration: a query
-    planned concurrently in the same session would plan without AQE —
-    a performance nuance, never a correctness one.  Concurrent
-    *checkpoint* callers are serialized by :data:`_AQE_FLIP_LOCK` so
-    interleaved save/flip/restore can never capture another caller's
-    transient 'false' and persist it past the helper's return.
+    planned concurrently in the same session would plan without AQE and
+    with this shuffle partition count — a performance nuance, never a
+    correctness one.  Concurrent *checkpoint* callers are serialized by
+    :data:`_CONF_FLIP_LOCK` so interleaved save/flip/restore can never
+    capture another caller's transient values and persist them past the
+    helper's return.
     """
     spark = df.sparkSession
-    with _AQE_FLIP_LOCK:
-        prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
+    n = partitions or partition_count(df)
+    flips = {"spark.sql.adaptive.enabled": "false",
+             "spark.sql.shuffle.partitions": str(n)}
+    with _CONF_FLIP_LOCK:
+        prev = {k: spark.conf.get(k) for k in flips}
+        for k, v in flips.items():
+            spark.conf.set(k, v)
         try:
-            return df.repartition(*[df[k] for k in keys]).transform(materialize)
+            return (df.repartition(n, *[df[k] for k in keys])
+                    .transform(materialize))
         finally:
-            spark.conf.set("spark.sql.adaptive.enabled", prev)
+            for k, v in prev.items():
+                spark.conf.set(k, v)

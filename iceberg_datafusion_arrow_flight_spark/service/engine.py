@@ -92,6 +92,12 @@ _DF_SETTINGS_RE = re.compile(r"\binformation_schema\.df_settings\b",
                              re.IGNORECASE)
 
 
+# DataFusion folds unquoted function names to lower case, so every
+# spelling (CURRENT_DATABASE(), Current_Schema ( )) reaches its UDF.
+_CURRENT_DATABASE_RE = re.compile(r"\bcurrent_database\s*\(\s*\)", re.I)
+_CURRENT_SCHEMA_RE = re.compile(r"\bcurrent_schema\s*\(\s*\)", re.I)
+
+
 def _env_identity() -> tuple[str, str]:
     """(current database, current schema): env at call time, defaults
     'datafusion' / 'public' (lib.rs:106-128, README.md:12)."""
@@ -221,8 +227,8 @@ class EngineService:
                 rf"(?<![\w.]){re.escape(qualified)}(?![\w.])",
                 view, masked)
         db, schema = _env_identity()
-        masked = (masked.replace("current_database()", f"'{db}'")
-                        .replace("current_schema()", f"'{schema}'"))
+        masked = _CURRENT_DATABASE_RE.sub(lambda _: f"'{db}'", masked)
+        masked = _CURRENT_SCHEMA_RE.sub(lambda _: f"'{schema}'", masked)
         return _unmask_literals(masked, saved)
 
     def _session(self, token: str) -> SparkSession:

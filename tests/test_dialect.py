@@ -226,6 +226,31 @@ def test_find_params_ignores_literals():
     assert find_params("SELECT $2 + $1, '$9'") == ["1", "2"]
 
 
+def test_comments_are_opaque_to_literal_masking():
+    """A quote inside a ``--`` or ``/* */`` comment opens no literal:
+    before comments were masked, the apostrophe in "don't" swallowed the
+    rest of the statement, so ``$1`` was not seen and ``to_char`` was
+    left untranslated.  A ``$n`` inside a comment is not a parameter."""
+    from iceberg_datafusion_arrow_flight_spark.dialect.rewrite import (
+        find_params, rewrite_sql)
+    assert find_params(
+        "SELECT a -- don't care\nFROM t WHERE k = $1 AND s = 'x'") == ["1"]
+    assert find_params("SELECT /* it's $3 */ a FROM t WHERE k = $2") == ["2"]
+    assert rewrite_sql("-- it's\nSELECT to_char(ts, '%Y') FROM t") == \
+        "-- it's\nSELECT date_format(ts, 'yyyy') FROM t"
+    # comments come back verbatim, and '--' inside a literal is text
+    sql = "SELECT x::int /* a::b, $4 */, '-- $5' FROM t -- y::int $6"
+    assert rewrite_sql(sql) == \
+        "SELECT CAST(x AS int) /* a::b, $4 */, '-- $5' FROM t -- y::int $6"
+
+
+def test_comment_with_quote_runs_on_spark(spark):
+    out = spark.sql(rewrite_sql(
+        "-- it's\nSELECT to_char(timestamp'2024-01-02 03:04:05', '%Y') AS y,"
+        " 1::bigint AS a /* don't */")).collect()
+    assert (out[0].y, out[0].a) == ("2024", 1)
+
+
 def test_literal_param_lookalike_executes(spark):
     """'costs $5' must run as a plain parameter-less statement."""
     from iceberg_datafusion_arrow_flight_spark.dialect.rewrite import rewrite_sql

@@ -498,9 +498,25 @@ def test_checkpoint_partitioned_round_is_exchange_free(spark):
     e = (spark.range(20000)
          .select((F.col("id") % 97).alias("a"), (F.col("id") % 131).alias("b"))
          .localCheckpoint(eager=True))
-    und = checkpoint_partitioned(
-        e.unionAll(e.select(F.col("b").alias("a"), F.col("a").alias("b"))),
-        "a")
+    # A small input lands on one partition per core, not on
+    # shuffle.partitions (raised here above defaultParallelism so the two
+    # differ; AQE would coalesce the same exchange to this size).
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "32")
+    try:
+        und = checkpoint_partitioned(
+            e.unionAll(e.select(F.col("b").alias("a"),
+                                F.col("a").alias("b"))),
+            "a")
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "32"
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    cores = spark.sparkContext.defaultParallelism
+    assert und.rdd.getNumPartitions() == cores
+    part = (und._jdf.queryExecution().executedPlan()
+            .outputPartitioning().toString())
+    assert part.startswith("hashpartitioning(a#") and \
+        part.endswith(f", {cores})"), part
     labels = (und.select(F.col("a").alias("node")).distinct()
               .withColumn("label", F.col("node")).localCheckpoint(eager=True))
     neigh = (und.join(F.broadcast(labels), und["b"] == labels["node"])
@@ -514,6 +530,42 @@ def test_checkpoint_partitioned_round_is_exchange_free(spark):
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
 
 
+def test_partition_count_follows_aqe_coalescing_target(spark):
+    """partition_count = min(shuffle.partitions, max(defaultParallelism,
+    ceil(sizeInBytes / advisoryPartitionSizeInBytes))), read from the
+    optimizer's estimate without a job: a small table gets one partition
+    per core, a mid-sized one ceil(size / advisory), and one whose
+    estimate exceeds shuffle.partitions × advisory stays at
+    shuffle.partitions — and checkpoint_partitioned materializes at that
+    count."""
+    from pyspark.sql import functions as F
+    from iceberg_datafusion_arrow_flight_spark.operators.partitioning import (
+        checkpoint_partitioned, partition_count)
+    e = (spark.range(20000)
+         .select((F.col("id") % 97).alias("a"), F.col("id").alias("b"))
+         .localCheckpoint(eager=True))
+    size = int(e._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    cores = spark.sparkContext.defaultParallelism
+    keys = ("spark.sql.shuffle.partitions",
+            "spark.sql.adaptive.advisoryPartitionSizeInBytes")
+    prev = {k: spark.conf.get(k) for k in keys}
+    try:
+        spark.conf.set(keys[0], str(4 * cores))
+        assert partition_count(e) == cores
+        spark.conf.set(keys[1], str(size // (cores + 2) + 1))
+        assert partition_count(e) == cores + 2
+        spark.conf.set(keys[1], str(size // (8 * cores)))
+        assert partition_count(e) == 4 * cores
+        big = checkpoint_partitioned(e, "a")
+        assert big.rdd.getNumPartitions() == 4 * cores
+        # an explicit count wins over the estimate
+        assert checkpoint_partitioned(e, "a", partitions=3) \
+            .rdd.getNumPartitions() == 3
+    finally:
+        for k, v in prev.items():
+            spark.conf.set(k, v)
+
+
 def test_fallback_round_join_is_exchange_free_without_broadcast(spark):
     """The non-broadcast regime (state too big for the broadcast
     threshold): the edge table is checkpointed partitioned on the JOIN
@@ -521,36 +573,47 @@ def test_fallback_round_join_is_exchange_free_without_broadcast(spark):
     co-partitioned — NO exchange on the O(edges) side; the only
     per-round shuffle is the group-key aggregation's O(nodes)
     partial-agg output.  This is the production round shape
-    connected_components/pagerank build with broadcast_state=False."""
+    connected_components/pagerank build with broadcast_state=False: one
+    partition count, computed once from the edge table, for both
+    sides."""
     import re
     from pyspark.sql import functions as F
     from iceberg_datafusion_arrow_flight_spark.operators.partitioning import (
-        checkpoint_partitioned)
+        checkpoint_partitioned, partition_count)
     # Emulate "state too big to broadcast": disable auto-broadcast so
     # the planner faces the same choice it would with a TB-scale state
     # side (the fixture relation is tiny and would otherwise broadcast).
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    prev = {k: spark.conf.get(k)
+            for k in ("spark.sql.autoBroadcastJoinThreshold",
+                      "spark.sql.shuffle.partitions")}
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    # shuffle.partitions above the computed count: the join must still
+    # see two sides with the SAME count, or it re-exchanges one of them
+    spark.conf.set("spark.sql.shuffle.partitions", "32")
     try:
         e = (spark.range(20000)
              .select((F.col("id") % 97).alias("a"),
                      (F.col("id") % 131).alias("b"))
              .localCheckpoint(eager=True))
+        n = partition_count(e)
         und = checkpoint_partitioned(
             e.unionAll(e.select(F.col("b").alias("a"),
                                 F.col("a").alias("b"))),
-            "b")
+            "b", partitions=n)
         # production init shape (operators/dedup.py:connected_components):
         # groupBy, not distinct+alias — an aliased label would make the
         # checkpoint capture hashpartitioning(label) and re-exchange here
         labels = checkpoint_partitioned(
             und.groupBy(F.col("a").alias("node"))
-            .agg(F.min("a").alias("label")), "node")
+            .agg(F.min("a").alias("label")), "node", partitions=n)
         neigh = (und.join(labels, und["b"] == labels["node"])
                  .groupBy("a").agg(F.min("label").alias("__nl")))
         plan = _explain(neigh, mode="simple")
     finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+        for k, v in prev.items():
+            spark.conf.set(k, v)
+    assert n == spark.sparkContext.defaultParallelism
+    assert und.rdd.getNumPartitions() == labels.rdd.getNumPartitions() == n
     exchanges = [m for m in re.findall(r"\w*Exchange\w*", plan)
                  if "Broadcast" not in m]
     # exactly ONE shuffle — the dst-keyed aggregation; the join itself
@@ -580,6 +643,28 @@ def test_iterative_graph_ops_agree_across_regimes(spark):
     pr_f = pagerank(dir_edges, iterations=3, broadcast_state=False)
     assert sorted(map(tuple, pr_b.collect())) == \
         sorted(map(tuple, pr_f.collect()))
+
+
+def test_pagerank_job_budget(spark, sf_dir):
+    """graph_pagerank_supply_chain's Spark jobs, counted under its own
+    job group.  Before the set-up was folded into one node table, the
+    plan ran 32 jobs here: eager materializations of the dangling set
+    and of the teleport vector, ``isEmpty()`` on the dangling set and a
+    separate node count, on top of the edge list and the rounds.  Now one
+    aggregate over the node table answers the node, dangling and seed
+    counts, and the teleport vector is a literal projection of it: 19
+    jobs, bounded at 21 so scheduling detail does not flake the test."""
+    sc = spark.sparkContext
+    prior = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setLocalProperty("spark.jobGroup.id", "pagerank-job-budget")
+    try:
+        rows = REGISTRY["graph_pagerank_supply_chain"].build(
+            spark, sf_dir).collect()
+        jobs = sc.statusTracker().getJobIdsForGroup("pagerank-job-budget")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", prior)
+    assert len(rows) == 20
+    assert len(jobs) <= 21, len(jobs)
 
 
 def test_checkpoint_partitioned_concurrent_flip_is_serialized(spark):

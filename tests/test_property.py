@@ -143,16 +143,29 @@ def _literal(draw):
     return "'" + "".join(parts) + "'"
 
 
+# Comment bodies add a lone quote: outside a literal it opens nothing.
+_COMMENT_ATOMS = _LIT_ATOMS + ["don't", "'", "to_char(ts, '%Y')"]
+
+
+@st.composite
+def _comment(draw):
+    body = "".join(draw(st.lists(st.sampled_from(_COMMENT_ATOMS),
+                                 min_size=0, max_size=5)))
+    return draw(st.sampled_from([f" -- {body}\n", f" /* {body} */"]))
+
+
 @settings(max_examples=300, deadline=None)
-@given(lits=st.lists(_literal(), min_size=1, max_size=4))
-@example(lits=["'to_char(,'", "')'"])
-def test_rewrite_is_identity_on_literal_only_statements(lits):
+@given(lits=st.lists(_literal(), min_size=1, max_size=4),
+       comments=st.lists(_comment(), min_size=0, max_size=4))
+@example(lits=["'to_char(,'", "')'"], comments=[])
+@example(lits=["'x'"], comments=[" -- it's\n"])
+def test_rewrite_is_identity_on_literal_only_statements(lits, comments):
     """A statement whose only dialect-looking content sits INSIDE string
-    literals must pass through the whole rewrite pipeline unchanged —
-    no pass may fire on literal contents."""
-    sql = ("SELECT "
-           + ", ".join(f"{lit} AS c{i}" for i, lit in enumerate(lits))
-           + " FROM t")
+    literals or comments must pass through the whole rewrite pipeline
+    unchanged — no pass may fire on literal or comment contents."""
+    items = [f"{lit} AS c{i}" + (comments[i] if i < len(comments) else "")
+             for i, lit in enumerate(lits)]
+    sql = "SELECT " + ", ".join(items) + " FROM t"
     assert rewrite_sql(sql) == sql
 
 

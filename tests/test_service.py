@@ -224,6 +224,30 @@ def test_current_database_env_override(service, monkeypatch):
         "current_database()"]
 
 
+def test_current_database_any_case(service, monkeypatch):
+    """DataFusion folds unquoted function names to lower case, so every
+    spelling reaches the env-driven UDF — Spark's builtins would answer
+    'default' for the spellings a case-sensitive replace misses.  A
+    quoted spelling stays text."""
+    monkeypatch.delenv("CURRENT_DATABASE", raising=False)
+    monkeypatch.delenv("CURRENT_SCHEMA", raising=False)
+    token = service.handshake("admin", "secret")
+
+    def one_row(sql):
+        h = service.create_prepared_statement(token, sql)
+        service.execute(token, h)
+        return service.fetch(token, h).to_pylist()[0]
+
+    for db, schema in (("current_database", "current_schema"),
+                       ("CURRENT_DATABASE", "CURRENT_SCHEMA"),
+                       ("Current_Database", "Current_Schema")):
+        assert one_row(f"SELECT {db}() AS d, {schema} ( ) AS s") == \
+            {"d": "datafusion", "s": "public"}, db
+    assert one_row("SELECT 'CURRENT_DATABASE()' AS s, "
+                   "current_schema() AS t -- current_database()") == \
+        {"s": "CURRENT_DATABASE()", "t": "public"}
+
+
 def test_ddl_and_dml_without_parameters_run_once(service, spark, tmp_path):
     """A statement without parameters is planned, and so run, once at
     prepare (lib.rs:699-700); execute_update must not run it again."""
