@@ -6,9 +6,12 @@ dialect) through its single gateway ``ctx.sql(user_query)``
 surface with identical spelling; this package closes the rest:
 
 - :mod:`.rewrite` — data-driven source-to-source rewrites for constructs
-  Spark spells differently (``::`` casts, ``$n`` parameters,
-  ``DISTINCT ON``, ``SIMILAR TO``, function-name aliases, ``to_char``
-  patterns, ``regexp_replace`` flags).
+  Spark spells differently (Postgres type names after ``::``,
+  double-quoted identifiers, ``$n`` parameters, ``DISTINCT ON``,
+  ``SIMILAR TO``, function-name aliases, ``to_char`` patterns,
+  ``regexp_replace`` flags).  One lexer finds the string literals,
+  quoted identifiers and comments, and no rewrite reaches inside them;
+  ``expr::type`` itself is left to Spark's parser.
 - :mod:`..functions.aliases` — SQL scalar UDFs (Spark 4 ``CREATE
   TEMPORARY FUNCTION ... RETURN expr`` — pure Catalyst expressions,
   inlined into codegen) for DataFusion names whose argument order or

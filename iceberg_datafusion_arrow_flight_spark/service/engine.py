@@ -57,7 +57,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..dialect import rewrite_sql, split_params
-from ..dialect.rewrite import _mask_literals, _unmask_literals, find_params
+from ..dialect.rewrite import find_params, mask, strip_comments, unmask
 from ..functions import register_dialect_functions
 
 ROLLBACK_LITERAL = "rollback"  # exact match, like lib.rs:677
@@ -210,8 +210,8 @@ class EngineService:
             self._catalog_names_by_token[token] = names
 
     def _service_passes(self, sql: str, token: str) -> str:
-        """The service's two textual passes, OUTSIDE string literals (same
-        masking discipline as the dialect passes):
+        """The service's two textual passes, in code only (the dialect
+        passes' masking):
 
         - qualified ``ns.table`` identifiers → the caller's session views.
           Boundaries exclude '.' so a longer dotted spelling
@@ -220,7 +220,7 @@ class EngineService:
           values.  The reference's two custom UDFs read env at call time
           (lib.rs:106-128, udf.rs:23-104); Spark's builtins answer from
           the catalog."""
-        masked, saved = _mask_literals(sql)
+        masked, saved = mask(sql)
         for qualified, view in self._catalog_names_by_token.get(
                 token, {}).items():
             masked = re.sub(
@@ -229,7 +229,7 @@ class EngineService:
         db, schema = _env_identity()
         masked = _CURRENT_DATABASE_RE.sub(lambda _: f"'{db}'", masked)
         masked = _CURRENT_SCHEMA_RE.sub(lambda _: f"'{schema}'", masked)
-        return _unmask_literals(masked, saved)
+        return unmask(masked, saved)
 
     def _session(self, token: str) -> SparkSession:
         try:
@@ -274,9 +274,11 @@ class EngineService:
         (lib.rs:678): EXPLAIN returns (plan_type, plan) rows —
         'logical_plan' + 'physical_plan', or 'Plan with Metrics' for
         EXPLAIN ANALYZE (which executes the query) — and DESCRIBE returns
-        (column_name, data_type, is_nullable), here from Catalyst."""
+        (column_name, data_type, is_nullable), here from Catalyst.
+        Comments do not hide a statement from these matches."""
         if sql == ROLLBACK_LITERAL:
             return _strings("rollback", [("ROLLBACK",)])
+        sql = strip_comments(sql)
         m = _SET_RE.match(sql)
         if m and (key := m.group(1).lower()).startswith("datafusion."):
             # the mapped Spark key first, so a refused value sets

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import pytest
+
 from iceberg_datafusion_arrow_flight_spark.dialect import rewrite_sql, split_params
 from iceberg_datafusion_arrow_flight_spark.dialect.rewrite import (
     rewrite_distinct_on, rewrite_params, rewrite_pg_casts,
@@ -10,19 +12,20 @@ from iceberg_datafusion_arrow_flight_spark.functions import (
     register_dialect_functions)
 
 
+# Spark parses ``::`` itself: a cast to a Spark type name is left as is.
 def test_pg_cast_simple():
     assert rewrite_pg_casts("SELECT a::bigint FROM t") == \
-        "SELECT CAST(a AS bigint) FROM t"
+        "SELECT a::bigint FROM t"
 
 
 def test_pg_cast_parenthesized_and_call():
     out = rewrite_pg_casts("SELECT (x + y)::decimal(10,2), f(z)::string")
-    assert out == "SELECT CAST((x + y) AS decimal(10,2)), CAST(f(z) AS string)"
+    assert out == "SELECT (x + y)::decimal(10,2), f(z)::string"
 
 
 def test_pg_cast_literal():
     assert rewrite_pg_casts("SELECT '1995-01-01'::date") == \
-        "SELECT CAST('1995-01-01' AS date)"
+        "SELECT '1995-01-01'::date"
 
 
 def test_pg_cast_bare_type_names_normalized():
@@ -30,11 +33,25 @@ def test_pg_cast_bare_type_names_normalized():
     # parser rejects length-less VARCHAR — the rewrite maps the Postgres
     # spellings to Spark types (found by tests/test_dialect_fuzz.py).
     out = rewrite_pg_casts("SELECT a::varchar, b::text, c::int4, d::float8")
-    assert out == ("SELECT CAST(a AS STRING), CAST(b AS STRING), "
-                   "CAST(c AS INT), CAST(d AS DOUBLE)")
+    assert out == "SELECT a::STRING, b::STRING, c::INT, d::DOUBLE"
     # parameterized forms are already Spark-legal and pass through
     assert rewrite_pg_casts("SELECT a::varchar(10)") == \
-        "SELECT CAST(a AS varchar(10))"
+        "SELECT a::varchar(10)"
+
+
+def test_every_mapped_pg_type_name_runs_on_spark(spark):
+    """Each Postgres type name, in either case and after a number or a
+    string, reaches Spark as a type it parses."""
+    from iceberg_datafusion_arrow_flight_spark.dialect.rewrite import (
+        _PG_TYPE_NAMES)
+    names = sorted(_PG_TYPE_NAMES)
+    row = spark.sql(rewrite_sql("SELECT " + ", ".join(
+        f"1::{n} AS c_{n}, '1'::{n.upper()} AS u_{n}" for n in names))
+    ).head()
+    want = {"STRING": "1", "SMALLINT": 1, "INT": 1, "BIGINT": 1,
+            "FLOAT": 1.0, "DOUBLE": 1.0, "BOOLEAN": True}
+    for n in names:
+        assert row[f"c_{n}"] == row[f"u_{n}"] == want[_PG_TYPE_NAMES[n]], n
 
 
 def test_params_named_and_repeated():
@@ -47,6 +64,15 @@ def test_similar_to():
     assert rewrite_similar_to("x SIMILAR TO 'ab%'") == "x RLIKE '^(?:ab.*)$'"
     assert rewrite_similar_to("x NOT SIMILAR TO 'a_b'") == \
         "x NOT RLIKE '^(?:a.b)$'"
+    # a '' escape is part of the pattern, not its end
+    assert rewrite_similar_to("x SIMILAR TO 'a''b%'") == \
+        "x RLIKE '^(?:a''b.*)$'"
+
+
+def test_similar_to_escaped_quote_runs_on_spark(spark):
+    sql = rewrite_sql("SELECT 'it''s ok' SIMILAR TO 'it''s%' AS m, "
+                      "'its ok' SIMILAR TO 'it''s%' AS n")
+    assert tuple(spark.sql(sql).head()) == (True, False)
 
 
 def test_regexp_flag_stripped():
@@ -241,7 +267,9 @@ def test_comments_are_opaque_to_literal_masking():
     # comments come back verbatim, and '--' inside a literal is text
     sql = "SELECT x::int /* a::b, $4 */, '-- $5' FROM t -- y::int $6"
     assert rewrite_sql(sql) == \
-        "SELECT CAST(x AS int) /* a::b, $4 */, '-- $5' FROM t -- y::int $6"
+        "SELECT x::int /* a::b, $4 */, '-- $5' FROM t -- y::int $6"
+    assert rewrite_sql("SELECT x::int4 /* a::int4 */ -- y::int4") == \
+        "SELECT x::INT /* a::int4 */ -- y::int4"
 
 
 def test_comment_with_quote_runs_on_spark(spark):
@@ -374,6 +402,12 @@ def test_regex_operators_rewrite_forms():
     out = rewrite_sql("SELECT * FROM t WHERE a ~ 'x' AND b !~* 'Y'")
     assert "regexp_like(a, 'x')" in out
     assert "NOT regexp_like(b, concat('(?i)', 'Y'))" in out
+    # a quoted identifier (double-quoted or backtick, bare or qualified)
+    # is an operand too
+    assert (rewrite_sql('SELECT "c" ~ \'x\' FROM t')
+            == "SELECT regexp_like(`c`, 'x') FROM t")
+    assert (rewrite_sql("SELECT t.`c` !~ \"d\" FROM t")
+            == "SELECT NOT regexp_like(t.`c`, `d`) FROM t")
     # literals are opaque: an infix ~ inside a string never rewrites
     assert rewrite_sql("SELECT 'a ~ b' AS s") == "SELECT 'a ~ b' AS s"
     # prefix bitwise NOT is untouched (no operand before the operator)
@@ -603,3 +637,39 @@ def test_grouping_sets_empty_shim_order_by_alias_runs_on_spark(spark):
                       "GROUP BY CUBE(a) ORDER BY x")
     rows = spark.sql(out).collect()
     assert len(rows) == 1 and rows[0]["n"] == 0  # the sentinel row
+
+
+def test_grouping_sets_empty_shim_native_cast(spark):
+    """The type after a native ``::`` cast is not a column reference, so
+    the shim still applies: over an empty input the statement returns
+    the grand-total row, as DuckDB does."""
+    import duckdb
+    sql = "SELECT a, sum(x)::bigint AS s FROM gs_cast GROUP BY ROLLUP(a)"
+    spark.range(0).selectExpr("CAST(id AS INT) AS a", "id AS x") \
+         .createOrReplaceTempView("gs_cast")
+    con = duckdb.connect()
+    con.execute("CREATE TABLE gs_cast (a INT, x BIGINT)")
+    want = con.execute(sql).fetchall()
+    con.close()
+    got = [tuple(r) for r in spark.sql(rewrite_sql(sql)).collect()]
+    assert got == want == [(None, None)]
+
+
+@pytest.mark.parametrize("q", ["`", '"'])
+def test_grouping_sets_empty_shim_quoted_column(spark, q):
+    """A quoted grouping column, repeated in the select list and in
+    GROUPING(), is still recognised as the grouping column: over an empty
+    input the statement returns DuckDB's grand-total row."""
+    import duckdb
+    sql = ("SELECT {a}, {a} AS a2, GROUPING({a}) AS g, {a} + 1 AS a1, "
+           "count(*) AS n FROM gs_q GROUP BY ROLLUP({a})")
+    spark.range(0).selectExpr("CAST(id AS INT) AS a") \
+         .createOrReplaceTempView("gs_q")
+    con = duckdb.connect()
+    con.execute("CREATE TABLE gs_q (a INT)")
+    want = con.execute(sql.format(a='"a"')).fetchall()
+    con.close()
+    rewritten = rewrite_sql(sql.format(a=f"{q}a{q}"))
+    assert "UNION ALL" in rewritten
+    got = [tuple(r) for r in spark.sql(rewritten).collect()]
+    assert got == want == [(None, None, 1, None, 0)]

@@ -129,11 +129,13 @@ from iceberg_datafusion_arrow_flight_spark.dialect.rewrite import (  # noqa: E40
 # Literal contents chosen to look like every dialect construct the
 # rewriter handles: $n params, ::casts, function names, SIMILAR TO,
 # AT TIME ZONE, regexp flags, to_char formats, embedded ('' escaped)
-# quotes.
+# quotes.  "SIMILAR TO ''" and a literal ending in "AT TIME ZONE " match
+# the raw passes' own patterns.
 _LIT_ATOMS = ["costs $5", "$1", "a::int", "upper(", "array_length(x)",
               "x SIMILAR TO y", "z AT TIME ZONE utc", "YYYY-MM-DD",
               "it''s", "''", "(", ")", ",", " ", "select", "to_char(",
-              "regexp_replace(a, b, c, g)", "encode", "100%"]
+              "regexp_replace(a, b, c, g)", "encode", "100%",
+              "a::int4", "SIMILAR TO ''", "x AT TIME ZONE "]
 
 
 @st.composite
@@ -143,8 +145,12 @@ def _literal(draw):
     return "'" + "".join(parts) + "'"
 
 
-# Comment bodies add a lone quote: outside a literal it opens nothing.
-_COMMENT_ATOMS = _LIT_ATOMS + ["don't", "'", "to_char(ts, '%Y')"]
+# Comment bodies add a lone quote (outside a literal it opens nothing)
+# and a call of each raw pass, literal included.
+_COMMENT_ATOMS = _LIT_ATOMS + [
+    "don't", "'", "to_char(ts, '%Y')", "x SIMILAR TO 'y'",
+    "x AT TIME ZONE 'UTC'", "arrow_cast(x, 'Int64')", "get_field(s, 'a')",
+    "d + INTERVAL '1 month 2 days'", "regexp_replace(a, 'b', 'c', 'g')"]
 
 
 @st.composite
@@ -154,28 +160,58 @@ def _comment(draw):
     return draw(st.sampled_from([f" -- {body}\n", f" /* {body} */"]))
 
 
+# Quoted-identifier contents: dialect lookalikes and both quote marks.
+_IDENT_ATOMS = ["$3", "a::int4", "upper(", "it's", '"', "`", " ", "--",
+                "x SIMILAR TO 'y'", "to_char(ts, '%Y')"]
+
+
+@st.composite
+def _ident(draw):
+    """(DataFusion spelling, Spark spelling) of a quoted identifier: a
+    double-quoted one becomes a backtick identifier."""
+    name = "".join(draw(st.lists(st.sampled_from(_IDENT_ATOMS), min_size=1,
+                                 max_size=4)))
+    spark = "`" + name.replace("`", "``") + "`"
+    return draw(st.sampled_from(
+        [('"' + name.replace('"', '""') + '"', spark), (spark, spark)]))
+
+
 @settings(max_examples=300, deadline=None)
 @given(lits=st.lists(_literal(), min_size=1, max_size=4),
-       comments=st.lists(_comment(), min_size=0, max_size=4))
-@example(lits=["'to_char(,'", "')'"], comments=[])
-@example(lits=["'x'"], comments=[" -- it's\n"])
-def test_rewrite_is_identity_on_literal_only_statements(lits, comments):
+       comments=st.lists(_comment(), min_size=0, max_size=4),
+       idents=st.lists(_ident(), min_size=0, max_size=4))
+@example(lits=["'to_char(,'", "')'"], comments=[], idents=[])
+@example(lits=["'x'"], comments=[" -- it's\n"], idents=[])
+@example(lits=["'x SIMILAR TO ''a%'''"], comments=[], idents=[])
+@example(lits=["'x'"], comments=[" -- x SIMILAR TO 'y'\n"], idents=[])
+@example(lits=["'x AT TIME ZONE '", "'y'"], comments=[], idents=[])
+@example(lits=["'x'"], comments=[], idents=[('"it\'s $3"', "`it's $3`")])
+def test_rewrite_is_identity_on_literal_only_statements(lits, comments,
+                                                        idents):
     """A statement whose only dialect-looking content sits INSIDE string
-    literals or comments must pass through the whole rewrite pipeline
-    unchanged — no pass may fire on literal or comment contents."""
-    items = [f"{lit} AS c{i}" + (comments[i] if i < len(comments) else "")
-             for i, lit in enumerate(lits)]
+    literals, comments or quoted identifiers must pass through the whole
+    rewrite pipeline unchanged — no pass may fire on their contents —
+    except that a double-quoted identifier takes Spark's backticks."""
+    items, want = [], []
+    for i, lit in enumerate(lits):
+        src, spark = idents[i] if i < len(idents) else (f"c{i}", f"c{i}")
+        tail = comments[i] if i < len(comments) else ""
+        items.append(f"{lit} AS {src}{tail}")
+        want.append(f"{lit} AS {spark}{tail}")
     sql = "SELECT " + ", ".join(items) + " FROM t"
-    assert rewrite_sql(sql) == sql
+    assert rewrite_sql(sql) == "SELECT " + ", ".join(want) + " FROM t"
 
 
 @settings(max_examples=300, deadline=None)
 @given(lits=st.lists(_literal(), min_size=0, max_size=3),
+       idents=st.lists(_ident(), min_size=0, max_size=3),
        real_params=st.sets(st.integers(min_value=1, max_value=9),
                            min_size=0, max_size=3))
-def test_find_params_sees_real_only(lits, real_params):
-    """$n outside literals is a parameter; $n inside literals never is."""
+def test_find_params_sees_real_only(lits, idents, real_params):
+    """$n in code is a parameter; $n inside a literal or a quoted
+    identifier never is."""
     clauses = [f"{lit} AS c{i}" for i, lit in enumerate(lits)]
+    clauses += [f"1 AS {src}" for src, _ in idents]
     clauses += [f"col{n} = ${n}" for n in sorted(real_params)]
     sql = "SELECT " + (", ".join(clauses) or "1") + " FROM t"
     assert find_params(sql) == [str(n) for n in sorted(real_params)]

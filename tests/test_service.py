@@ -559,6 +559,64 @@ def test_literal_dollar_does_not_defer_schema(service):
     assert service.fetch(token, h).column("price").to_pylist() == ["costs $5"]
 
 
+def _view_k(service, token):
+    """dq_t(k, `it's`): k = 0, 1, 2 and `it's` = 10 * k."""
+    service.execute_update(token, service.create_prepared_statement(
+        token, "CREATE OR REPLACE TEMPORARY VIEW dq_t AS "
+               "SELECT id AS k, id * 10 AS `it's` FROM range(3)"))
+
+
+def test_double_quoted_identifier_reads_the_column(service):
+    """DataFusion reads "k" as an identifier; Spark alone would read it
+    as the string 'k'."""
+    token = service.handshake("admin", "secret")
+    _view_k(service, token)
+    h = service.create_prepared_statement(token,
+                                          'SELECT "k" FROM dq_t ORDER BY k')
+    t = service.fetch(token, service.execute(token, h))
+    assert t.column(0).to_pylist() == [0, 1, 2]
+
+
+def test_apostrophe_in_quoted_identifier_opens_no_literal(service):
+    """The apostrophe in "it's" must not hide $1 from parameter
+    detection: the statement waits for its value instead of failing
+    to parse at prepare."""
+    token = service.handshake("admin", "secret")
+    _view_k(service, token)
+    h = service.create_prepared_statement(
+        token, "SELECT \"it's\" AS c, k FROM dq_t WHERE k = $1 AND 'a' = 'a'")
+    service.bind_parameters(token, h, [1])
+    t = service.fetch(token, service.execute(token, h))
+    assert t.to_pylist() == [{"c": 10, "k": 1}]
+
+
+@pytest.mark.parametrize("sql, columns", [
+    ("-- set\nSET datafusion.execution.target_partitions = 7", []),
+    ("SHOW ALL /* c */", ["name", "value"]),
+    ("-- list\nSHOW TABLES", ["table_catalog", "table_schema",
+                              "table_name", "table_type"]),
+    ("SHOW TABLES -- x", ["table_catalog", "table_schema", "table_name",
+                          "table_type"]),
+    ("SHOW COLUMNS FROM orders -- x",
+     ["table_catalog", "table_schema", "table_name", "column_name",
+      "data_type", "is_nullable"]),
+    ("/* c */ DESCRIBE orders", ["column_name", "data_type",
+                                 "is_nullable"]),
+    ("-- plan\nEXPLAIN SELECT 1", ["plan_type", "plan"]),
+], ids=["set", "show_all", "show_tables_leading", "show_tables_trailing",
+        "show_columns", "describe", "explain"])
+def test_comment_does_not_hide_engine_answered_statement(
+        table_service, sql, columns):
+    """A comment around SET / SHOW / DESCRIBE / EXPLAIN still gets the
+    engine's DataFusion-shaped answer, not Spark's own command."""
+    token = table_service.handshake("admin", "secret")
+    h = table_service.create_prepared_statement(token, sql)
+    assert table_service.statement_schema(h).names == columns
+    if sql.startswith("-- set"):
+        assert table_service.sessions[token].conf.get(
+            "spark.sql.shuffle.partitions") == "7"
+
+
 def test_show_tables_and_columns(service):
     """DataFusion answers SHOW TABLES / SHOW COLUMNS from
     information_schema (enabled in the reference, lib.rs:92) — same
